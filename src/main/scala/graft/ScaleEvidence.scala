@@ -129,8 +129,6 @@ object ScaleEvidence {
     // key off their own SPARK_GRAFT_ES_PREFILTER so the ES A/B (which
     // predates the family generalization) stays independently
     // reproducible — a family-wide OFF run must set BOTH to 0.
-    // ann_lsh always runs the lshTopK default (singleton prefilter off —
-    // measured a wash at this band width, see lshTopK scaladoc)
     val dedupPfEnv = sys.env.get("SPARK_GRAFT_DEDUP_PREFILTER")
     val dedupPf = dedupPfEnv.forall(_ != "0") // exact/url default ON
     val sentencePf = dedupPfEnv.contains("1") // sentence default OFF
@@ -217,8 +215,6 @@ object ScaleEvidence {
              cast(pmod(hash(base * 64 + j), 2001) - 1000 as float) / 1000.0f +
              cast(pmod(hash(id * 64 + j), 7) as float) / 10000.0f)"""))
         .select(col("id"), col("vec"))
-      // singleton prefilter left at its (off) default: measured a wash at
-      // this band width/scale — see lshTopK scaladoc
       Similarity.lshTopK(vecs, "id", "vec", k = 5, bands = 8, bitsPerBand = 24).count()
     }
 

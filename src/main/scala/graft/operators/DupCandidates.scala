@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The round-6 duplicate-candidate prefilter, shared by the dedup family
-  * (ExactDedup, UrlDedup, SentenceDedup, ExactSubstrDedup, lshTopK).
+  * (ExactDedup, UrlDedup, SentenceDedup, ExactSubstrDedup).
   *
   * First-occurrence / best-of-group dedup only ever needs the rows whose
   * key occurs MORE THAN ONCE: a key-unique row is the single member of its
   * group — its own representative — so it can be assigned locally and must
-  * never ride the group-by/join exchanges. `dupKeys` shuffles ONLY the key
+  * never ride the group-by/join exchanges. The key aggregate shuffles ONLY the key
   * (+ an 8-byte partial count, map-side combined, hash-agg — no sort) and
   * the callers broadcast-LEFT-SEMI-join the input against that small set.
   *
@@ -63,13 +63,10 @@ private[graft] object DupCandidates {
     df.sparkSession.conf
       .get(MaxBroadcastKeyBytesConf, DefaultMaxBroadcastKeyBytes.toString).toLong
 
-  /** Distinct keys of `df` occurring more than once. Map-side partial
-    * aggregation absorbs hot keys before the exchange, so a key shared by
-    * millions of rows costs one combiner cell per map task, not a skewed
-    * reducer. */
-  def dupKeys(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    dupKeysWithCounts(df, keyCols).drop("__n")
-
+  /** Distinct keys of `df` occurring more than once, with their counts.
+    * Map-side partial aggregation absorbs hot keys before the exchange, so
+    * a key shared by millions of rows costs one combiner cell per map
+    * task, not a skewed reducer. */
   private def dupKeysWithCounts(df: DataFrame, keyCols: Seq[String]): DataFrame =
     df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
       .where(col("__n") > 1)
@@ -136,12 +133,4 @@ private[graft] object DupCandidates {
       Guarded(None, nKeys, maxN)
     }
   }
-
-  /** `df` restricted to rows whose key occurs more than once, via a
-    * broadcast left-semi join (the broadcast is the point: an unhinted
-    * semi would shuffle the very table this prefilter exists to keep
-    * local). UNGUARDED — kept for call sites that have already sized the
-    * key set; new callers should go through [[guardedDupKeys]]. */
-  def filterToDupKeys(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.join(broadcast(dupKeys(df, keyCols)), keyCols, "left_semi")
 }

@@ -302,7 +302,7 @@ object MinhashDedup {
       return driverComponents(pairs, spark)
     }
     // Fill the edge cache with ONE explicit action before the label lineage
-    // consumes it: the initial-labels job reads `edges` through four union
+    // consumes it: the initial-labels job reads `edges` through two union
     // branches, and concurrent tasks racing an unfilled cache each
     // recompute the heavy signature/window lineage per branch (measured
     // 1.7 s vs 0.14 s cached at sf0.1). A forced path (limit 0) skipped

@@ -418,7 +418,7 @@ class ScaleShapeSpec extends SparkSpec {
     assert(loose.where(col("minhash_keep")).count() == 200)
   }
 
-  test("lshTopK: recall@1 >= 0.9 on planted clusters; ids-only through the pair join") {
+  test("lshTopK: recall@1 >= 0.9 on planted clusters; no pair join in the plan") {
     // 60 clusters × 5 members: base gaussian vectors, members = base + small
     // noise (cosine ≈ 0.99) — the distribution LSH is designed for
     val rng = new scala.util.Random(11)
@@ -442,11 +442,8 @@ class ScaleShapeSpec extends SparkSpec {
     val hits = joined.where(col("qc") === col("nc")).count()
     val n = rows.size
     assert(hits.toDouble / n >= 0.9, s"recall@1 ${hits.toDouble / n}")
-    // singleton-bucket prefilter (non-default) is output-identical to the
-    // full self-join
-    val pf = Similarity.lshTopK(df, "vec_id", "embedding", k = 1,
-      prefilterSingletonBuckets = true)
-    assert(top1.collect().map(_.toSeq).toSet == pf.collect().map(_.toSeq).toSet)
+    // candidates are scored inside their bucket group: no pair join
+    assert(!planOf(top1).contains("Join"), "candidate pairs must not become join rows")
   }
 
   test("ivfTopK: recall@1 >= 0.9 on planted clusters (coarse quantizer + probe)") {
@@ -469,6 +466,7 @@ class ScaleShapeSpec extends SparkSpec {
       .join(df.select(col("vec_id").as("neighbor"), col("cluster").as("nc")), Seq("neighbor"))
     val hits = joined.where(col("qc") === col("nc")).count()
     assert(hits.toDouble / rows.size >= 0.9, s"recall@1 ${hits.toDouble / rows.size}")
+    assert(!planOf(top1).contains("Join"), "candidate pairs must not become join rows")
     // determinism: same input -> same neighbors
     val again = Similarity.ivfTopK(df, "vec_id", "embedding", k = 1, nLists = 16, nProbe = 4)
     assert(top1.select("vec_id", "neighbor").collect().toSet ==
