@@ -118,6 +118,7 @@ object RunPipeline {
     ckpt.writeMetrics("stage_filtered", pipeline.metricsOf(filtered))
 
     // stage 2: split kept vs quarantine
+    // withQuarantine commits the quarantine before kept: kept/_SUCCESS implies both
     if (!ckpt.isCommitted("kept")) {
       Writers.withQuarantine(filtered, ckpt.stagePath("kept"), s"$output/quarantine")
     }

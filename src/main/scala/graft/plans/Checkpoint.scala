@@ -26,13 +26,17 @@ final class Checkpoint(val baseDir: String)(implicit spark: SparkSession) {
 
   /** Run `compute` unless this stage already committed; either way return
     * the committed result (reading back decouples downstream stages from
-    * upstream lineage — a rerun never recomputes committed work). */
-  def stage(name: String)(compute: => DataFrame): DataFrame = {
-    if (!isCommitted(name)) {
-      compute.write.mode(SaveMode.Overwrite).parquet(stagePath(name))
+    * upstream lineage — a rerun never recomputes committed work). A
+    * computed stage is read back with the schema it was written with,
+    * which skips Spark's schema-inference job; file sources make a
+    * supplied schema nullable, so it equals the inferred one. */
+  def stage(name: String)(compute: => DataFrame): DataFrame =
+    if (isCommitted(name)) spark.read.parquet(stagePath(name))
+    else {
+      val df = compute
+      df.write.mode(SaveMode.Overwrite).parquet(stagePath(name))
+      spark.read.schema(df.schema).parquet(stagePath(name))
     }
-    spark.read.parquet(stagePath(name))
-  }
 
   /** Single owner of the metrics layout — writers and readers must agree. */
   def metricsPath(name: String): String = s"$baseDir/_metrics/$name"

@@ -35,16 +35,22 @@ object Writers {
   }
 
   /** The exclusion-writer pattern (filters/base_filter.py:62-83): one pass
-    * computes (keep, drop_reason); kept rows go to `outPath`, dropped rows
-    * to `quarantinePath` partitioned by drop reason (the reference's
-    * "${filter_reason}/${rank}.jsonl" templating). Caching the input of the
-    * two writes avoids recomputing the filter chain. */
+    * computes (keep, drop_reason); kept rows go to `outPath` without those
+    * two columns, dropped rows to `quarantinePath` as one flat table in
+    * which `drop_reason` is an ordinary column (read one reason with
+    * `.where(col("drop_reason") === r)`). Each output is at most one file
+    * per task; partitioning by reason would write tasks × reasons files,
+    * and nothing reads the quarantine by directory. The quarantine commits
+    * first and kept last, so kept's `_SUCCESS` marks the pair committed: a
+    * crash before it leaves kept uncommitted and a resumed run rewrites
+    * both. Caching the input of the two writes avoids recomputing the
+    * filter chain. */
   def withQuarantine(result: DataFrame, outPath: String, quarantinePath: String,
                      keepCol: String = "keep", reasonCol: String = "drop_reason"): Unit = {
     val cached = result.cache()
     try {
+      parquet(cached.where(!col(keepCol)), quarantinePath)
       parquet(cached.where(col(keepCol)).drop(keepCol, reasonCol), outPath)
-      parquet(cached.where(!col(keepCol)), quarantinePath, partitionBy = Seq(reasonCol))
     } finally { cached.unpersist(); () }
   }
 }

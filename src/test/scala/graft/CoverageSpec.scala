@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.operators._
-import graft.sources.{Readers, WarcParser, Writers}
+import graft.plans.Checkpoint
+import graft.sources.{Readers, WarcParser, WebCorpusGen, Writers}
 
 class CoverageSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +30,50 @@ class CoverageSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/out").count() == 1)
     val q = spark.read.parquet(s"$dir/quarantine")
     assert(q.count() == 2)
-    assert(q.select("drop_reason").distinct().count() == 2) // partition column readable
+    assert(q.select("drop_reason").distinct().count() == 2)
+
+    // a QualityPipeline verdict table committed through Checkpoint.stage, split
+    // into a flat quarantine: one file per task, drop_reason an ordinary column
+    val input = WebCorpusGen.generate(spark, 400, partitions = 4).select("url", "warc_ts", "text", "lang")
+    val pipeline = new QualityPipeline(Presets.fineweb(languages = Some(Seq("en")),
+      badwords = WebCorpusGen.BadWordsFixture.asMap))
+    val ckpt = new Checkpoint(s"$dir/ckpt")
+    val verdicts = ckpt.stage("stage_filtered")(pipeline.run(input).toDF())
+    Writers.withQuarantine(verdicts, ckpt.stagePath("kept"), s"$dir/pq")
+    val qRoot = new java.io.File(s"$dir/pq")
+    assert(!qRoot.listFiles().exists(_.getName.startsWith("drop_reason=")))
+    val qFiles = java.nio.file.Files.walk(qRoot.toPath).toArray
+      .count(_.toString.endsWith(".parquet"))
+    assert(qFiles >= 1 && qFiles <= verdicts.rdd.getNumPartitions, s"$qFiles quarantine files")
+    val pq = spark.read.parquet(s"$dir/pq")
+    assert(pq.schema("drop_reason").dataType == StringType)
+    val kept = spark.read.parquet(ckpt.stagePath("kept"))
+    assert(!kept.columns.contains("keep") && !kept.columns.contains("drop_reason"))
+    val byReason = pq.groupBy("drop_reason").count().as[(String, Long)].collect().toMap
+    val metricDrops = pipeline.metricsOf(verdicts).where(col("stage") =!= "(kept)")
+      .groupBy("drop_reason").agg(sum("count")).as[(String, Long)].collect().toMap
+    assert(byReason.size > 1 && byReason == metricDrops)
+    assert(kept.count() + pq.count() == 400)
+  }
+
+  test("writers: a failed quarantine write leaves kept uncommitted; a rerun commits both") {
+    val dir = java.nio.file.Files.createTempDirectory("torn").toString
+    val ckpt = new Checkpoint(dir)
+    val verdicts = ckpt.stage("stage_filtered") {
+      Seq((1L, "keep me", true, ""), (2L, "bad", false, "gopher_short_doc"))
+        .toDF("id", "text", "keep", "drop_reason")
+    }
+    // RunPipeline's stage 2: split unless kept already committed
+    def stage2(quarantine: String): Unit =
+      if (!ckpt.isCommitted("kept")) Writers.withQuarantine(verdicts, ckpt.stagePath("kept"), quarantine)
+    val blocker = new java.io.File(s"$dir/blocker")
+    assert(blocker.createNewFile())
+    intercept[Exception](stage2(s"${blocker.getPath}/quarantine"))
+    assert(!ckpt.isCommitted("kept"))
+    stage2(s"$dir/quarantine")
+    assert(ckpt.isCommitted("kept") && new java.io.File(s"$dir/quarantine/_SUCCESS").exists())
+    assert(spark.read.parquet(ckpt.stagePath("kept")).count() == 1)
+    assert(spark.read.parquet(s"$dir/quarantine").count() == 1)
   }
 
   test("compression round trips: gzip jsonl, zstd parquet (reference compression tests)") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators._
@@ -183,6 +185,40 @@ class OpsSpec extends SparkSpec {
     assert(ckpt.isCommitted("s1"))
     ckpt.writeMetrics("s1", Seq(("s1", 0, "", 2L)).toDF("stage", "partition_id", "drop_reason", "count"))
     assert(spark.read.parquet(s"$dir/_metrics/s1").count() == 1)
+
+    // a computed stage is one job (the write; no schema-inference job) and
+    // reads back with the schema inference would give, nullability included
+    val verdicts = new QualityPipeline(Presets.forkDataCleaning(Seq("en")))
+      .run(WebCorpusGen.generate(spark, 40, partitions = 2).select("url", "warc_ts", "text", "lang")).toDF()
+    val typed = Seq((1L, 2, 0.5, true, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
+      Seq("a", "b"), Map("k" -> 1L), BigDecimal("1.25")))
+      .toDF("l", "i", "d", "b", "ts", "arr", "m", "dec")
+    assert(typed.schema.exists(!_.nullable) && verdicts.schema.exists(!_.nullable))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener { // only this test's jobs, not a background query's
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "ckpt_readback")) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    spark.sparkContext.setJobGroup("ckpt_readback", "ckpt_readback")
+    try {
+      for ((name, df) <- Seq("verdicts" -> verdicts, "typed" -> typed)) {
+        ListenerBusDrain(spark.sparkContext)
+        jobs.set(0)
+        val computed = ckpt.stage(name)(df)
+        ListenerBusDrain(spark.sparkContext)
+        assert(jobs.get == 1, s"$name: ${jobs.get} jobs")
+        assert(computed.schema == spark.read.parquet(ckpt.stagePath(name)).schema, name)
+        val resumed = ckpt.stage(name)(sys.error(s"stage $name recomputed"))
+        assert(resumed.schema == computed.schema, name)
+        assert(resumed.count() == df.count(), name)
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(counter)
+    }
   }
 
   test("streaming: pipeline runs incrementally over a memory stream") {
