@@ -132,7 +132,7 @@ object RunPipeline {
   }
 
   /** The posture's dedup chain (VERDICT r6 #8): exact → url → minhash →
-    * sentence (measured default: prefilter OFF) → anchored ExactSubstr.
+    * sentence → anchored ExactSubstr.
     * Each phase is a committed snapshot (resume skips it), prints one
     * per-phase JSON metrics line (sec, rows_out, shuffle bytes — same
     * listener as ScaleEvidence), and lands in `_metrics/posture_phases`.
@@ -141,8 +141,7 @@ object RunPipeline {
     * Returns the final kept table (`stage_exact_substr`). */
   def postureDedupChain(kept: DataFrame, ckpt: Checkpoint)
                        (implicit spark: SparkSession): DataFrame = {
-    val meter = new PhaseMetrics
-    spark.sparkContext.addSparkListener(meter)
+    val meter = new PhaseMetrics(spark.sparkContext)
     try {
       // a resumed run must not overwrite a committed phase's REAL metrics
       // with the read-back timing of its skip (review-caught, round 7):
@@ -154,17 +153,9 @@ object RunPipeline {
       val phaseRows = scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long, Long, Boolean)]()
       def phase(name: String)(body: => DataFrame): DataFrame = {
         val wasCommitted = ckpt.isCommitted(s"stage_$name")
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
-        val t0 = System.nanoTime()
-        val out = body
-        val rows = out.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.clearJobGroup()
-        meter.settle(name)
-        val sr = meter.shuffleRead.getOrDefault(name, 0L)
-        val sw = meter.shuffleWrite.getOrDefault(name, 0L)
-        phaseRows += ((name, sec, rows, sr, sw, wasCommitted))
-        println(f"""{"phase":"$name","sec":$sec%.2f,"rows_out":$rows,"shuffle_read_mb":${sr / 1e6}%.1f,"shuffle_write_mb":${sw / 1e6}%.1f,"resumed":$wasCommitted}""")
+        val ((out, rows), p) = meter.phase(name) { val o = body; (o, o.count()) }
+        phaseRows += ((name, p.sec, rows, p.shuffleReadBytes, p.shuffleWriteBytes, wasCommitted))
+        println(p.json("rows_out" -> rows, "resumed" -> wasCommitted))
         out
       }
       // doc_id must be unique PER CAPTURE, not per url: hashing only the
@@ -259,7 +250,7 @@ object RunPipeline {
           "shuffle_write_bytes", "resumed"))
       }
       es
-    } finally spark.sparkContext.removeSparkListener(meter)
+    } finally meter.detach()
   }
 
   private def spark_masterOrLocal(): String =

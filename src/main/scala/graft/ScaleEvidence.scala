@@ -59,7 +59,7 @@ object ScaleEvidence {
     val onlyPhases: Option[Set[String]] =
       if (args.length > 1 && args(1) != "all") Some(args(1).split(",").toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Measure.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "64")
@@ -69,35 +69,25 @@ object ScaleEvidence {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new PhaseMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val metrics = new PhaseMetrics(spark.sparkContext)
     startHeapPoller()
     implicit val sp: SparkSession = spark
 
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Long)]()
 
-    def phase(name: String)(body: => Long): Unit = {
-      // gen_corpus always runs (every phase reads its output); others obey
-      // the selector so one JVM can measure one phase in isolation
-      if (name != "gen_corpus" && onlyPhases.exists(!_.contains(name))) return
-      // settle the JVM before attributing heap/time to this phase
-      System.gc()
-      resetPhasePeak()
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      val out = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.clearJobGroup()
-      results(name) = (sec, out)
-      metrics.settle(name)
-      val sr = metrics.shuffleRead.getOrDefault(name, 0L)
-      val sw = metrics.shuffleWrite.getOrDefault(name, 0L)
-      val in = metrics.inputBytes.getOrDefault(name, 0L)
-      // phase-local peak (snapshotted after the body, reset at entry) —
-      // the global run max only appears in the summary line
-      val heapGb = phasePeak / 1e9
-      println(f"""{"phase":"$name","sec":$sec%.2f,"rows_out":$out,"shuffle_read_mb":${sr / 1e6}%.1f,"shuffle_write_mb":${sw / 1e6}%.1f,"input_mb":${in / 1e6}%.1f,"peak_heap_gb":$heapGb%.2f}""")
-    }
+    // gen_corpus always runs (every phase reads its output); others obey
+    // the selector so one JVM can measure one phase in isolation
+    def phase(name: String)(body: => Long): Unit =
+      if (name == "gen_corpus" || onlyPhases.forall(_.contains(name))) {
+        // settle the JVM before attributing heap/time to this phase
+        System.gc()
+        resetPhasePeak()
+        val (out, p) = metrics.phase(name)(body)
+        results(name) = (p.sec, out)
+        // phase-local peak (snapshotted after the body, reset at entry) —
+        // the global run max only appears in the summary line
+        println(p.json("rows_out" -> out, "peak_heap_gb" -> phasePeak / 1e9))
+      }
 
     // ---- corpus (cached across runs like Bench.ensureCorpus)
     val path = s"/tmp/graft_corpus_$rows"
@@ -123,15 +113,13 @@ object ScaleEvidence {
     val docs = corpus.select(
       col("url"), xxhash64(col("url")).as("doc_id"), col("text"))
 
-    // SPARK_GRAFT_DEDUP_PREFILTER: unset → every phase measures its
-    // operator's DEFAULT (exact/url prefilter ON, sentence OFF); "0" →
-    // all off; "1" → all on. The two exact_substr phases DELIBERATELY
-    // key off their own SPARK_GRAFT_ES_PREFILTER so the ES A/B (which
-    // predates the family generalization) stays independently
-    // reproducible — a family-wide OFF run must set BOTH to 0.
-    val dedupPfEnv = sys.env.get("SPARK_GRAFT_DEDUP_PREFILTER")
-    val dedupPf = dedupPfEnv.forall(_ != "0") // exact/url default ON
-    val sentencePf = dedupPfEnv.contains("1") // sentence default OFF
+    // SPARK_GRAFT_DEDUP_PREFILTER: unset → the exact and url phases
+    // measure their operator's DEFAULT (prefilter ON); "0" → off. The two
+    // exact_substr phases DELIBERATELY key off their own
+    // SPARK_GRAFT_ES_PREFILTER so the ES A/B (which predates the family
+    // generalization) stays independently reproducible — a family-wide OFF
+    // run must set BOTH to 0.
+    val dedupPf = sys.env.get("SPARK_GRAFT_DEDUP_PREFILTER").forall(_ != "0")
     val esPf = sys.env.get("SPARK_GRAFT_ES_PREFILTER").forall(_ != "0")
 
     phase("exact_dedup") {
@@ -147,8 +135,7 @@ object ScaleEvidence {
     }
 
     phase("sentence_dedup") {
-      SentenceDedup(docs, "doc_id", "text",
-        SentenceDedupConfig(prefilterDupHashes = sentencePf))
+      SentenceDedup(docs, "doc_id", "text")
         .filter(!col("sentence_dedup_keep")).count()
     }
 

@@ -232,19 +232,7 @@ final case class SentenceDedupConfig(
     /** HashConfig (utils/hashing.py:12-30): precision 32 halves signature
       * width at 100 TB scale; sha1 matches the fork's configured hashes. */
     hashPrecision: Int = 64,
-    hashFc: String = "xxhash",
-    /** Round-6 duplicate-candidate prefilter (see corpusDups): ON keeps
-      * the unique-hash majority out of the first-wins exchange via an
-      * 8-byte count pass + broadcast semi-join (+ a sigs persist for the
-      * extra consumption). OFF by default, measured honestly at 2M on a
-      * quiet host: 27.7 s / 1,321 MB ON vs 26.1 s / 1,483 MB OFF — the
-      * sig rows are already slim (hash, doc, sent) and the first-wins agg
-      * is map-side partial, so the prefilter saves only ~16% exchange
-      * while paying an extra pass + a dup-set broadcast; unlike
-      * ExactDedup (whose payload is the full text, 143× cut) the trade
-      * never crosses over. Turn ON only when the duplicated-window share
-      * is tiny AND the cluster is exchange-bound. */
-    prefilterDupHashes: Boolean = false)
+    hashFc: String = "xxhash")
 
 object SentenceDedup {
 
@@ -279,18 +267,7 @@ object SentenceDedup {
   def apply(df: DataFrame, idCol: String, textCol: String,
             cfg: SentenceDedupConfig = SentenceDedupConfig())
            (implicit spark: SparkSession): DataFrame = {
-    // with the prefilter, the slim sigs projection is consumed four times
-    // (count pass, semi probe, first-wins agg, join-back) — persist it so
-    // the heavy window-hash UDF (simplify + tokenize + hash every n-unit
-    // window) runs once, the same multi-consumption hazard withIndex's
-    // loose mode already persists for
-    val sigs0 = sigsOf(df, idCol, textCol, cfg)
-    val sigs =
-      if (cfg.prefilterDupHashes)
-        CacheRegistry.swapRotating("sentencededup.sigs",
-          sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else sigs0
-    val dups = corpusDups(sigs, cfg.prefilterDupHashes)
+    val dups = corpusDups(sigsOf(df, idCol, textCol, cfg))
       .groupBy("__doc")
       .agg(sort_array(collect_list(col("__sent"))).as("__dupSents"))
     finish(df, idCol, textCol, cfg, dups)
@@ -301,35 +278,14 @@ object SentenceDedup {
     * a ubiquitous boilerplate window (one hash, millions of rows) is
     * absorbed by map-side partial aggregation, and the join back gets AQE
     * skew-splitting; WindowExec would sort the whole hot group on one
-    * reducer with no mitigation. Round 6 adds the duplicate-candidate
-    * prefilter (same identity argument as ExactSubstrDedup): an 8-byte
-    * hash+count pass finds duplicated window hashes, candidates
-    * broadcast-semi-join against that small set, and the min/join-back
-    * pair runs over candidates only — a corpus-unique hash's single row
-    * is its own first occurrence and the `!= __first` cut discards it
-    * regardless, so the fat (hash, doc, sent) rows of the unique majority
-    * never ride the min exchange or the join. */
-  private def corpusDups(sigs: DataFrame, prefilter: Boolean): DataFrame = {
-    // runtime-guarded (round 7): even with the non-default flag ON, a
-    // mass-dup corpus whose duplicated-window-hash set exceeds the
-    // broadcast budget degrades to the unprefiltered shape instead of
-    // OOMing the driver
-    val guarded: Option[DataFrame] =
-      if (prefilter)
-        DupCandidates.guardedDupKeys(sigs.select("__hash"), Seq("__hash"),
-          "sentencededup.duphashes").keys
-      else None
-    val prefilterActive = guarded.isDefined
-    val cand = guarded match {
-      case Some(dk) => sigs.join(broadcast(dk), Seq("__hash"), "left_semi")
-      case None => sigs
-    }
-    val firsts = cand.groupBy("__hash")
+    * reducer with no mitigation. No duplicate-candidate prefilter: the sig
+    * rows are already slim (hash, doc, sent) and the min is map-side
+    * partial, so a count pass + dup-set broadcast did not pay at 2M
+    * (27.7 s with it vs 26.1 s without). */
+  private def corpusDups(sigs: DataFrame): DataFrame = {
+    val firsts = sigs.groupBy("__hash")
       .agg(min(struct(col("__doc"), col("__sent"))).as("__first"))
-    cand
-      // prefiltered: firsts is one row per DUPLICATED hash — broadcast it
-      // so the candidate rows skip a sort-merge exchange for the join-back
-      .join(if (prefilterActive) broadcast(firsts) else firsts, Seq("__hash"))
+    sigs.join(firsts, Seq("__hash"))
       .where(struct(col("__doc"), col("__sent")) =!= col("__first"))
       .select("__hash", "__doc", "__sent")
   }
@@ -364,7 +320,7 @@ object SentenceDedup {
     val dupRows =
       if (onlyDedupInIndex) fromIndex
       else fromIndex.select("__hash", "__doc", "__sent")
-        .union(corpusDups(sigs, cfg.prefilterDupHashes)).distinct()
+        .union(corpusDups(sigs)).distinct()
     val dups = dupRows.groupBy("__doc")
       .agg(sort_array(collect_list(col("__sent"))).as("__dupSents"))
     finish(df, idCol, textCol, cfg, dups)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The round-6 duplicate-candidate prefilter, shared by the dedup family
-  * (ExactDedup, UrlDedup, SentenceDedup, ExactSubstrDedup).
+  * (ExactDedup, UrlDedup, ExactSubstrDedup) and the posture's doc-id
+  * distinct in `RunPipeline.postureDedupChain`.
   *
   * First-occurrence / best-of-group dedup only ever needs the rows whose
   * key occurs MORE THAN ONCE: a key-unique row is the single member of its

@@ -143,8 +143,8 @@ final case class GopherRepetitionConfig(
 
 object GopherRepetitionFilter {
   // Python re.split keeps leading/trailing empty fields → Java split limit -1
-  private val ParaExp = Pattern.compile("\n{2,}")
-  private val LineExp = Pattern.compile("\n+")
+  private[graft] val ParaExp = Pattern.compile("\n{2,}")
+  private[graft] val LineExp = Pattern.compile("\n+")
 
   /** The fork's data_cleaning.py:146 relaxed dup-n-gram thresholds. */
   val ForkDupNGrams: Seq[(Int, Double)] =

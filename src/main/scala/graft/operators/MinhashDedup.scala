@@ -82,17 +82,129 @@ object MinhashDedup {
     Some(mins)
   }
 
-  /** Per-doc bucket signatures: each bucket's `hashesPerBucket` min-hashes
-    * folded into one 128-bit struct key (two independent polynomial
-    * accumulators — see the in-body note). Empty docs (< nGrams words) yield no
-    * rows — they can never be duplicates (matches reference behavior where
-    * such docs crash/skip stage 1; we drop them from the sig table). */
+  /** Signature step 1: one 64-bit hash per space-joined `ng`-word shingle
+    * (`words.length >= ng`).
+    * Each word is UTF-8-encoded ONCE and the sha1 digest is fed
+    * incrementally — bit-identical to sha1(joined string) without the
+    * per-shingle StringBuilder/String/getBytes round trip (r6). */
+  private[graft] def shingleHashes(words: Array[String], ng: Int, useSha1: Boolean): Array[Long] = {
+    val wbytes: Array[Array[Byte]] =
+      if (useSha1) words.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      else null
+    val sb = if (useSha1) null else new java.lang.StringBuilder()
+    val last = words.length - ng
+    val h0s = new Array[Long](last + 1)
+    var i = 0
+    while (i <= last) {
+      h0s(i) =
+        if (useSha1) {
+          val md = Hashes.sha1Borrow()
+          var j = i
+          while (j < i + ng) {
+            if (j > i) md.update(' '.toByte)
+            md.update(wbytes(j))
+            j += 1
+          }
+          Hashes.sha1DigestToLong64(md.digest())
+        } else {
+          sb.setLength(0)
+          var j = i
+          while (j < i + ng) {
+            if (j > i) sb.append(' ')
+            sb.append(words(j))
+            j += 1
+          }
+          Hashes.xxhash64(sb.toString)
+        }
+      i += 1
+    }
+    h0s
+  }
+
+  /** Signature step 2: the min of (h*a(k)+b(k)) mod (2^61-1) over all
+    * shingles, for each of the `a.length` permutations. The mod is the
+    * Mersenne shift-add reduction (exact: v = hi*2^61+lo ≡ hi+lo, one
+    * conditional subtract since hi ≤ 7) instead of a 64-bit unsigned divide,
+    * and the loop is TRANSPOSED (perm-outer, shingle-inner, 2-way unrolled
+    * over perms): a(k)/b(k) and the running min live in registers — measured
+    * 1.06 → 0.76 s per 20k docs (r6). Same arithmetic per (shingle, perm)
+    * pair as [[minhashes]], so the mins are bit-identical. */
+  private[graft] def permutationMins(h0s: Array[Long], a: Array[Long], b: Array[Long]): Array[Long] = {
+    val n = a.length
+    val nShingles = h0s.length
+    val mins = new Array[Long](n)
+    var k = 0
+    while (k + 1 < n) {
+      val a0 = a(k); val b0 = b(k); val a1 = a(k + 1); val b1 = b(k + 1)
+      var m0 = -1L; var m1 = -1L // unsigned max
+      var i = 0
+      while (i < nShingles) {
+        val h0 = h0s(i)
+        val v0 = h0 * a0 + b0
+        var p0 = (v0 & MersennePrime) + (v0 >>> 61)
+        if (p0 >= MersennePrime) p0 -= MersennePrime
+        if (java.lang.Long.compareUnsigned(p0, m0) < 0) m0 = p0
+        val v1 = h0 * a1 + b1
+        var p1 = (v1 & MersennePrime) + (v1 >>> 61)
+        if (p1 >= MersennePrime) p1 -= MersennePrime
+        if (java.lang.Long.compareUnsigned(p1, m1) < 0) m1 = p1
+        i += 1
+      }
+      mins(k) = m0; mins(k + 1) = m1
+      k += 2
+    }
+    if (k < n) { // odd n tail (nb*hpb is even for every shipped config)
+      val ak = a(k); val bk = b(k)
+      var mn = -1L
+      var i = 0
+      while (i < nShingles) {
+        val v = h0s(i) * ak + bk
+        var phv = (v & MersennePrime) + (v >>> 61)
+        if (phv >= MersennePrime) phv -= MersennePrime
+        if (java.lang.Long.compareUnsigned(phv, mn) < 0) mn = phv
+        i += 1
+      }
+      mins(k) = mn
+    }
+    mins
+  }
+
+  /** Signature step 3: each band's `hpb` mins folded to 128 bits (two
+    * independent polynomial accumulators). Everything downstream —
+    * window-min, index distinct, left_semi probe — needs EQUALITY only, and
+    * the fold cuts the per-(doc,band) shuffle payload from a ~140-byte hex
+    * string to 16 bytes (measured 3.6 GB → ~0.7 GB at 2M docs). False
+    * band-equality needs both 64-bit folds to collide: ~2^-128 per pair, ≪1
+    * expected even at 10^12 docs × 14 bands (same analysis as
+    * ExactSubstrDedup.spanHashes). */
+  private[graft] def foldBands(mins: Array[Long], nb: Int, hpb: Int): Array[(Long, Long)] = {
+    val out = new Array[(Long, Long)](nb)
+    var bi = 0
+    while (bi < nb) {
+      var f1 = 0L; var f2 = 0L
+      var k = bi * hpb
+      while (k < (bi + 1) * hpb) {
+        f1 = f1 * 0x100000001b3L + mins(k)
+        f2 = f2 * 0x9E3779B97F4A7C15L + mins(k)
+        k += 1
+      }
+      out(bi) = (f1, f2)
+      bi += 1
+    }
+    out
+  }
+
+  /** Per-doc bucket signatures: the three steps above over
+    * `Tokenizer.words(simplify_text(text))`. Empty docs (< nGrams words)
+    * yield no rows — they can never be duplicates (matches reference
+    * behavior where such docs crash/skip stage 1; we drop them from the sig
+    * table). [[minhashes]] keeps the naive remainderUnsigned form as the
+    * truth twin; DedupSpec pins fold-equality between the two paths. */
   def signatures(df: DataFrame, idCol: String, textCol: String,
                  cfg: MinhashDedupConfig = MinhashDedupConfig()): DataFrame = {
     val (a, b) = parameters(cfg)
     val nb = cfg.numBuckets
     val hpb = cfg.hashesPerBucket
-    val n = nb * hpb
     val ng = cfg.nGrams
     val useSha1 = cfg.hashFunc == "sha1"
 
@@ -103,112 +215,7 @@ object MinhashDedup {
         if (text == null) Array.empty[String]
         else Tokenizer.words(TextKernels.simplifyText(text))
       if (words.length < ng) Array.empty[(Long, Long)]
-      else {
-        // CPU-kernel shape (r6, VERDICT r5 #3 — the exchange is solved at
-        // 0.45 KB/doc, shingle hashing is the remaining sf1 cost):
-        //  * each word is UTF-8-encoded ONCE and the shingle digest is fed
-        //    incrementally — bit-identical to sha1(joined string) without
-        //    the per-shingle StringBuilder/String/getBytes round trip;
-        //  * the (h*a+b) mod (2^61-1) permutation uses the Mersenne
-        //    shift-add reduction (exact: v = hi*2^61+lo ≡ hi+lo, one
-        //    conditional subtract since hi ≤ 7) instead of a 64-bit
-        //    unsigned divide per permutation per shingle;
-        //  * the permutation loop is TRANSPOSED (perm-outer, shingle-inner,
-        //    2-way unrolled over perms): a(k)/b(k) and the running min live
-        //    in registers instead of three array accesses per inner
-        //    iteration — MinhashProfile measured 1.06 → 0.76 s per 20k docs
-        //    with identical output sums. Pure reorder: same arithmetic per
-        //    (shingle, perm) pair, so signatures are bit-identical.
-        // minhashes() keeps the naive remainderUnsigned form as the truth
-        // twin; DedupSpec pins fold-equality between the two paths.
-        val wbytes: Array[Array[Byte]] =
-          if (useSha1) words.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          else null
-        val sb = if (useSha1) null else new java.lang.StringBuilder()
-        val last = words.length - ng
-        val h0s = new Array[Long](last + 1)
-        var i = 0
-        while (i <= last) {
-          h0s(i) =
-            if (useSha1) {
-              val md = Hashes.sha1Borrow()
-              var j = i
-              while (j < i + ng) {
-                if (j > i) md.update(' '.toByte)
-                md.update(wbytes(j))
-                j += 1
-              }
-              Hashes.sha1DigestToLong64(md.digest())
-            } else {
-              sb.setLength(0)
-              var j = i
-              while (j < i + ng) {
-                if (j > i) sb.append(' ')
-                sb.append(words(j))
-                j += 1
-              }
-              Hashes.xxhash64(sb.toString)
-            }
-          i += 1
-        }
-        val nShingles = h0s.length
-        val mins = new Array[Long](n)
-        var k = 0
-        while (k + 1 < n) {
-          val a0 = a(k); val b0 = b(k); val a1 = a(k + 1); val b1 = b(k + 1)
-          var m0 = -1L; var m1 = -1L // unsigned max
-          i = 0
-          while (i < nShingles) {
-            val h0 = h0s(i)
-            val v0 = h0 * a0 + b0
-            var p0 = (v0 & MersennePrime) + (v0 >>> 61)
-            if (p0 >= MersennePrime) p0 -= MersennePrime
-            if (java.lang.Long.compareUnsigned(p0, m0) < 0) m0 = p0
-            val v1 = h0 * a1 + b1
-            var p1 = (v1 & MersennePrime) + (v1 >>> 61)
-            if (p1 >= MersennePrime) p1 -= MersennePrime
-            if (java.lang.Long.compareUnsigned(p1, m1) < 0) m1 = p1
-            i += 1
-          }
-          mins(k) = m0; mins(k + 1) = m1
-          k += 2
-        }
-        if (k < n) { // odd n tail (nb*hpb is even for every shipped config)
-          val ak = a(k); val bk = b(k)
-          var mn = -1L
-          i = 0
-          while (i < nShingles) {
-            val v = h0s(i) * ak + bk
-            var phv = (v & MersennePrime) + (v >>> 61)
-            if (phv >= MersennePrime) phv -= MersennePrime
-            if (java.lang.Long.compareUnsigned(phv, mn) < 0) mn = phv
-            i += 1
-          }
-          mins(k) = mn
-        }
-        // band identity folded to 128 bits (two independent polynomial
-        // accumulators over the band's min-hashes): everything downstream
-        // — window-min, index distinct, left_semi probe — needs EQUALITY
-        // only, and the fold cuts the per-(doc,band) shuffle payload from
-        // a ~140-byte hex string to 16 bytes (measured 3.6 GB → ~0.7 GB at
-        // 2M docs). False band-equality needs both 64-bit folds to
-        // collide: ~2^-128 per pair, ≪1 expected even at 10^12 docs × 14
-        // bands (same analysis as ExactSubstrDedup.spanHashes).
-        val out = new Array[(Long, Long)](nb)
-        var bi = 0
-        while (bi < nb) {
-          var f1 = 0L; var f2 = 0L
-          var k = bi * hpb
-          while (k < (bi + 1) * hpb) {
-            f1 = f1 * 0x100000001b3L + mins(k)
-            f2 = f2 * 0x9E3779B97F4A7C15L + mins(k)
-            k += 1
-          }
-          out(bi) = (f1, f2)
-          bi += 1
-        }
-        out
-      }
+      else foldBands(permutationMins(shingleHashes(words, ng, useSha1), a, b), nb, hpb)
     }
 
     df.select(col(idCol).as("doc"), posexplode(sigUdf(col(textCol))).as(Seq("bucket", "sig")))

@@ -11,8 +11,8 @@ package graft.operators
   *  - AQE + skew-join + partition coalescing ON — runtime re-planning is
   *    the only defense local measurement can't pre-compute at 1000
   *    executors;
-  *  - the dedup-family duplicate-candidate prefilters at their measured
-  *    defaults (exact/url/ES ON, sentence OFF), now behind the runtime
+  *  - the dedup-family duplicate-candidate prefilters (exact/url/ES; the
+  *    sentence first-wins pass has none), behind the runtime
   *    broadcast guard (spark.graft.dedup.maxBroadcastKeys) so a mass-dup
   *    corpus degrades to single-pass instead of OOMing;
   *  - ExactSubstr in the ANCHORED mode (winnowing w=8 + the 15-word short
@@ -46,8 +46,8 @@ object ScalePosture {
   val exactSubstr: ExactSubstrConfig =
     ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8))
 
-  /** SentenceDedup at its measured default — prefilter OFF (slim sig rows;
-    * 2M quiet A/B read 26.1 s OFF vs 27.7 s ON, see SentenceDedupConfig). */
+  /** SentenceDedup at its defaults (no duplicate-candidate prefilter: slim
+    * sig rows; a 2M quiet A/B read 26.1 s without vs 27.7 s with one). */
   val sentenceDedup: SentenceDedupConfig = SentenceDedupConfig()
 
   /** MinHash at the fork's parameters (14×8 sha1). */

@@ -1,17 +1,21 @@
 package graft.plans
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-phase shuffle/input attribution: job-group ids → stage ids → task
-  * metrics. Extracted from ScaleEvidence (round 5) so RunPipeline's
-  * `--posture scale` mode reports the same per-phase table the at-scale
-  * evidence harness does, from the same listener.
+  * metrics, and the one phase timer built on it ([[phase]]). Registers
+  * itself on `sc`; [[detach]] removes it. RunPipeline's `--posture scale`
+  * chain, ScaleEvidence and `graft.Measure` all time their phases here.
   */
-final class PhaseMetrics extends SparkListener {
+final class PhaseMetrics(sc: SparkContext) extends SparkListener {
   private val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-  val shuffleRead = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  val shuffleWrite = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  val inputBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val shuffleRead = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val shuffleWrite = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val inputBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  sc.addSparkListener(this)
+
+  def detach(): Unit = sc.removeSparkListener(this)
 
   override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
     val group = Option(jobStart.properties)
@@ -19,9 +23,9 @@ final class PhaseMetrics extends SparkListener {
     jobStart.stageInfos.foreach(si => stageToGroup.put(si.stageId, group))
   }
 
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-    val g = stageToGroup.getOrDefault(sc.stageInfo.stageId, "ungrouped")
-    val m = sc.stageInfo.taskMetrics
+  override def onStageCompleted(done: SparkListenerStageCompleted): Unit = {
+    val g = stageToGroup.getOrDefault(done.stageInfo.stageId, "ungrouped")
+    val m = done.stageInfo.taskMetrics
     if (m != null) {
       shuffleRead.merge(g, m.shuffleReadMetrics.totalBytesRead, (a, b) => a + b)
       shuffleWrite.merge(g, m.shuffleWriteMetrics.bytesWritten, (a, b) => a + b)
@@ -35,7 +39,7 @@ final class PhaseMetrics extends SparkListener {
 
   /** Listener events arrive asynchronously: wait until this group's
     * counters stop moving before sampling them (review-caught undercount). */
-  def settle(name: String, maxWaitMs: Int = 3000): Unit = {
+  private def settle(name: String, maxWaitMs: Int = 3000): Unit = {
     var prev = -1L
     var cur = total(name)
     var waited = 0
@@ -44,6 +48,37 @@ final class PhaseMetrics extends SparkListener {
       Thread.sleep(250)
       waited += 250
       cur = total(name)
+    }
+  }
+
+  /** Runs `body` as job group `name` and returns its result with the
+    * phase's wall seconds and settled shuffle/input bytes (counted afresh:
+    * a repeated name does not add to an earlier phase's bytes). */
+  def phase[T](name: String)(body: => T): (T, PhaseMetrics.Phase) = {
+    Seq(shuffleRead, shuffleWrite, inputBytes).foreach(_.remove(name))
+    sc.setJobGroup(name, name, interruptOnCancel = false)
+    val t0 = System.nanoTime()
+    val out = try body finally sc.clearJobGroup()
+    val sec = (System.nanoTime() - t0) / 1e9
+    settle(name)
+    (out, PhaseMetrics.Phase(name, sec, shuffleRead.getOrDefault(name, 0L),
+      shuffleWrite.getOrDefault(name, 0L), inputBytes.getOrDefault(name, 0L)))
+  }
+}
+
+object PhaseMetrics {
+  final case class Phase(name: String, sec: Double, shuffleReadBytes: Long,
+                         shuffleWriteBytes: Long, inputBytes: Long) {
+    /** One JSON line starting `{"phase":"<name>"`; `extra` fields follow
+      * the timing ones (doubles at two decimals, strings quoted). */
+    def json(extra: (String, Any)*): String = {
+      val rest = extra.map {
+        case (k, d: Double) => f""","$k":$d%.2f"""
+        case (k, v: String) => s""","$k":"$v""""
+        case (k, v) => s""","$k":$v"""
+      }.mkString
+      f"""{"phase":"$name","sec":$sec%.2f,"shuffle_read_mb":${shuffleReadBytes / 1e6}%.1f,""" +
+        f""""shuffle_write_mb":${shuffleWriteBytes / 1e6}%.1f,"input_mb":${inputBytes / 1e6}%.1f$rest}"""
     }
   }
 }

@@ -1,0 +1,57 @@
+package graft
+
+import org.apache.spark.sql.functions._
+import graft.operators._
+
+/** `graft.Measure`'s layers at tiny sizes on the shared test session, so
+  * the measurement tool is compiled, run and checked with the engine it
+  * measures. `scaling` launches executor JVMs and is not run here. */
+class MeasureSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("kernel: every fineweb stage timed under its DocStage name, plus the split steps") {
+    val names = Measure.kernel(40).map(_._1)
+    val stages = Presets.fineweb(badwords = Map("en" -> Seq("x"))).map(_.name)
+    assert(stages.forall(names.contains), s"$stages vs $names")
+    assert(names.contains("gopher_repetition.dup_ngrams"))
+    assert(names.contains("minhash.permutations"))
+    assert(names.distinct == names)
+  }
+
+  test("query and plan: a named query, full_pipeline, and one formatted plan per name") {
+    val times = Measure.query(spark, sf, Seq("gopher_quality", "full_pipeline"), reps = 1)
+    assert(times.map(_._1) == Seq("gopher_quality", "full_pipeline"))
+    assert(times.forall(_._2 > 0))
+    val dir = java.nio.file.Files.createTempDirectory("measure_plan")
+    val failed = Measure.plan(spark, sf, dir.toString, "_t", Seq("gopher_quality", "no_such_query"))
+    assert(failed == Seq("no_such_query"))
+    val plan = new String(java.nio.file.Files.readAllBytes(dir.resolve("gopher_quality_t.txt")), "UTF-8")
+    assert(plan.contains("== Physical Plan =="))
+  }
+
+  test("dedup: UF and distributed labels agree, guarded and fallback ExactDedup keep the same count") {
+    val r = Measure.dedup(spark, 400)
+    assert(r.edges > 0 && r.removed > 0)
+    assert(r.labelMismatches == 0)
+    assert(r.guardedKept == r.fallbackKept)
+    assert(r.guardedKept < 400)
+  }
+
+  test("exact-substr: one output row per input doc, later copies of a shared passage cut") {
+    val dir = java.nio.file.Files.createTempDirectory("measure_es")
+    val passage = (1 to 60).map(i => s"shared$i").mkString(" ")
+    val docs = (0 until 12).map { i =>
+      val own = (1 to 60).map(j => s"doc${i}w$j").mkString(" ")
+      (i.toLong, if (i % 4 == 0) s"$own $passage" else own)
+    }
+    docs.toDF("doc_id", "text").coalesce(1).write.json(s"$dir/in")
+    Measure.exactSubstr(spark, s"$dir/in", s"$dir/out", None, None)
+    val out = spark.read.json(s"$dir/out")
+    assert(out.count() == docs.size)
+    assert(out.select("doc_id").as[Long].collect().sorted.toSeq == docs.map(_._1))
+    val cut = out.where(col("n_removed_words") > 0).select("doc_id").as[Long].collect().toSet
+    assert(cut == Set(4L, 8L), "the first copy survives, later ones lose the passage")
+  }
+}

@@ -25,8 +25,6 @@ class ScalePostureSpec extends SparkSpec {
     // anchored ES is THE declared scale mode, not stride-1
     assert(ScalePosture.exactSubstr.anchorEvery.contains(8))
     assert(ScalePosture.exactSubstr.shortSpanWords.contains(15))
-    // sentence prefilter at its measured default (OFF — slim sig rows)
-    assert(!ScalePosture.sentenceDedup.prefilterDupHashes)
   }
 
   test("lsh preconditions are loud: low dims and uncentered data throw") {

@@ -71,6 +71,26 @@ class ScaleShapeSpec extends SparkSpec {
     assert(out.where(!col("minhash_keep") && col("minhash_cluster") === 0).count() == 4999)
   }
 
+  private lazy val webCorpus = {
+    val dir = java.nio.file.Files.createTempDirectory("scanplan").toString
+    graft.sources.WebCorpusGen.generate(spark, 200, partitions = 2)
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("fineweb pipeline scan: html is pruned from the parquet ReadSchema") {
+    assert(webCorpus.columns.contains("html"))
+    val kept = new QualityPipeline(Presets.fineweb()).run(webCorpus).filter(_.keep)
+    val readSchema = "ReadSchema: struct<[^>]*>".r.findAllIn(planOf(kept.toDF())).toSeq
+    assert(readSchema.nonEmpty && readSchema.forall(!_.contains("html")),
+      s"the pipeline never reads html, so the scan must not either: $readSchema")
+  }
+
+  test("parquet scan: a lang equality filter is pushed down") {
+    val plan = planOf(webCorpus.where(col("lang") === "en").select("url"))
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*EqualTo\\(lang,en\\).*"), plan.take(600))
+  }
+
   test("simhash: self-join candidates, exact dups cluster, no collect_list") {
     val docs = spark.range(0, 400).select(col("id").as("doc_id"),
       when(col("id") % 4 === 0, lit("an identical duplicated document body with plenty of words to hash stably across copies"))
@@ -168,11 +188,6 @@ class ScaleShapeSpec extends SparkSpec {
       snap(ExactDedup(df, "doc_id", "text", prefilterDupKeys = false), "doc_id", "exact_keep", "exact_dup_rep"))
     assert(snap(UrlDedup(df, "url", "doc_id", "prio", normalize = true), "doc_id", "url_keep", "url_dup_rep") ==
       snap(UrlDedup(df, "url", "doc_id", "prio", normalize = true, prefilterDupKeys = false), "doc_id", "url_keep", "url_dup_rep"))
-    val threeLine = df.withColumn("text",
-      concat(col("text"), lit("\nmid "), col("text"), lit("\n"), col("text"), lit(" end")))
-    assert(snap(SentenceDedup(threeLine, "doc_id", "text",
-        SentenceDedupConfig(prefilterDupHashes = true)), "doc_id", "sentence_dedup_keep", "text") ==
-      snap(SentenceDedup(threeLine, "doc_id", "text"), "doc_id", "sentence_dedup_keep", "text"))
     // plan pins: the prefilter must reach the min pass as a broadcast
     // LEFT-SEMI on ONE node (a shuffled semi would re-shuffle the table it
     // exists to protect), and the non-candidate split must be a broadcast
@@ -181,9 +196,6 @@ class ScaleShapeSpec extends SparkSpec {
     assert(p.matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"), p.take(400))
     assert(p.matches("(?s).*BroadcastHashJoin[^\\n]*LeftAnti.*"), p.take(400))
     assert(planOf(UrlDedup(df, "url", "doc_id", "prio"))
-      .matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"))
-    assert(planOf(SentenceDedup(threeLine, "doc_id", "text",
-        SentenceDedupConfig(prefilterDupHashes = true)))
       .matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"))
   }
 
@@ -250,10 +262,8 @@ class ScaleShapeSpec extends SparkSpec {
     // dup-key count and pin (a) the chosen plan has no broadcast semi/anti
     // — the single-pass shape — and (b) the answers are unchanged.
     val rows = (0 until 40).map { i =>
-      // variants differ by a LETTER, not a digit: SentenceDedup's window
-      // hash runs simplify_text, which normalizes every number to "0" —
-      // digit-only variation would collapse all docs to ONE dup key and
-      // legitimately stay under budget
+      // eight text variants, five copies each: eight dup keys, over a
+      // budget of one
       val v = ('a' + i % 8).toChar
       val text = s"body variant $v$v shared across five docs"
       (i.toLong, text, s"https://host$v.example/page", java.lang.Long.valueOf((i % 3).toLong))
@@ -284,13 +294,6 @@ class ScaleShapeSpec extends SparkSpec {
       assert(!pes.contains("LeftSemi") && pes.contains("Window"),
         "over budget, ExactSubstr must fall back to the full-table window shape")
       assert(snap(es, "doc_id", "exact_substr_keep", "text") == esRef)
-      val threeLine = df.withColumn("text",
-        concat(col("text"), lit("\nmid "), col("text"), lit("\n"), col("text"), lit(" end")))
-      val sd = SentenceDedup(threeLine, "doc_id", "text",
-        SentenceDedupConfig(prefilterDupHashes = true))
-      assert(!planOf(sd).contains("LeftSemi"))
-      assert(snap(sd, "doc_id", "sentence_dedup_keep", "text") ==
-        snap(SentenceDedup(threeLine, "doc_id", "text"), "doc_id", "sentence_dedup_keep", "text"))
     } finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
   }
 

@@ -27,7 +27,7 @@ text.split(' '), so word indices map to byte offsets unambiguously.
 
 Usage:
   python3 tools/exact_substr_divergence.py gen   /tmp/es_corpus.jsonl
-  sbt -batch "runMain graft.ExactSubstrMeasure /tmp/es_corpus.jsonl /tmp/es_out"
+  sbt -batch "runMain graft.Measure exact-substr /tmp/es_corpus.jsonl /tmp/es_out"
   python3 tools/exact_substr_divergence.py score /tmp/es_corpus.jsonl /tmp/es_out
 """
 import glob
