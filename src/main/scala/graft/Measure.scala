@@ -210,7 +210,8 @@ object Measure {
   // ---- dedup -------------------------------------------------------------
 
   final case class DedupResult(removed: Long, docsPerSec: Double, edges: Long,
-                               labelMismatches: Long, guardedKept: Long, fallbackKept: Long)
+                               labelMismatches: Long, guardedKept: Long, fallbackKept: Long,
+                               urlGuardedKept: Long, urlFallbackKept: Long)
 
   /** The dedup family at `rows` docs, every step a phase:
     *  - MinHash recall and docs/s on a near-dup corpus (every 5th doc a
@@ -218,9 +219,11 @@ object Measure {
     *    threshold s≈0.72), then its signatures → edges → components, with
     *    the distributed label propagation forced (`driverEdgeLimit = 0`)
     *    and checked label-for-label against the driver union-find;
-    *  - ExactDedup on a mass-dup corpus (half the docs in 10-copy
-    *    families): the guarded prefilter vs the fallback forced by a zero
-    *    key budget, which must keep the same count. */
+    *  - ExactDedup and UrlDedup, the two callers of
+    *    `DupCandidates.firstWins`, on a mass-dup corpus (half the docs in
+    *    10-copy text families; every url shared by ~4 docs): the guarded
+    *    prefilter vs the single-pass fallback forced by a zero key budget,
+    *    which must keep the same count. */
   def dedup(spark: SparkSession, rows: Long): DedupResult = {
     implicit val sp: SparkSession = spark
     val meter = new PhaseMetrics(spark.sparkContext)
@@ -278,16 +281,22 @@ object Measure {
       val massDups = keep(spark.range(rows).select(id.as("doc_id"),
         textOf(when(id % 20 < 10, id - id % 20).otherwise(id)).as("text")))
       phase("mass_dup_corpus")(massDups.count())
-      val (guarded, _) = phase("exact_dedup_guarded") {
-        ExactDedup(massDups, "doc_id", "text").where(col("exact_keep")).count()
-      }
-      val (fallback, _) = phase("exact_dedup_fallback") {
+      def singlePass[T](body: => T): T = {
         spark.conf.set(DupCandidates.MaxBroadcastKeysConf, "0")
-        try ExactDedup(massDups, "doc_id", "text").where(col("exact_keep")).count()
-        finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
+        try body finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
       }
-      println(s"""{"metric":"dedup_checks","edges":$nEdges,"label_mismatches":$mismatches,"guarded_kept":$guarded,"fallback_kept":$fallback}""")
-      DedupResult(removed, rows / mh.sec, nEdges, mismatches, guarded, fallback)
+      def exactKept(): Long = ExactDedup(massDups, "doc_id", "text").where(col("exact_keep")).count()
+      val (guarded, _) = phase("exact_dedup_guarded")(exactKept())
+      val (fallback, _) = phase("exact_dedup_fallback")(singlePass(exactKept()))
+      val docId = col("doc_id")
+      val urls = massDups.select(docId,
+        concat(lit("https://site.example/p"), (docId % math.max(1L, rows / 4)).cast("string")).as("url"),
+        (docId % 3).as("prio"))
+      def urlKept(): Long = UrlDedup(urls, "url", "doc_id", "prio").where(col("url_keep")).count()
+      val (urlGuarded, _) = phase("url_dedup_guarded")(urlKept())
+      val (urlFallback, _) = phase("url_dedup_fallback")(singlePass(urlKept()))
+      println(s"""{"metric":"dedup_checks","edges":$nEdges,"label_mismatches":$mismatches,"guarded_kept":$guarded,"fallback_kept":$fallback,"url_guarded_kept":$urlGuarded,"url_fallback_kept":$urlFallback}""")
+      DedupResult(removed, rows / mh.sec, nEdges, mismatches, guarded, fallback, urlGuarded, urlFallback)
     } finally {
       cached.foreach(_.unpersist())
       meter.detach()

@@ -113,19 +113,10 @@ object ScaleEvidence {
     val docs = corpus.select(
       col("url"), xxhash64(col("url")).as("doc_id"), col("text"))
 
-    // SPARK_GRAFT_DEDUP_PREFILTER: unset → the exact and url phases
-    // measure their operator's DEFAULT (prefilter ON); "0" → off. The two
-    // exact_substr phases DELIBERATELY key off their own
-    // SPARK_GRAFT_ES_PREFILTER so the ES A/B (which predates the family
-    // generalization) stays independently reproducible — a family-wide OFF
-    // run must set BOTH to 0.
-    val dedupPf = sys.env.get("SPARK_GRAFT_DEDUP_PREFILTER").forall(_ != "0")
-    val esPf = sys.env.get("SPARK_GRAFT_ES_PREFILTER").forall(_ != "0")
-
     phase("exact_dedup") {
       // the PRODUCT operator (annotate-back included); was an inline
       // groupBy(text) probe through round 6's first isolated table
-      ExactDedup(docs, "doc_id", "text", prefilterDupKeys = dedupPf)
+      ExactDedup(docs, "doc_id", "text")
         .filter(!col("exact_keep")).count()
     }
 
@@ -141,7 +132,7 @@ object ScaleEvidence {
 
     phase("url_dedup") {
       UrlDedup(docs.withColumn("priority", col("doc_id") % 5),
-        "url", "doc_id", "priority", prefilterDupKeys = dedupPf).count()
+        "url", "doc_id", "priority").count()
     }
 
     phase("exact_substr") {
@@ -150,12 +141,9 @@ object ScaleEvidence {
       // streams per doc), ids+positions only through the shuffle
       // SPARK_GRAFT_ES_ANCHOR=<w> measures the winnowing-anchored scale
       // path (content-defined span sampling, ~2/(w+1) of the rows)
-      // SPARK_GRAFT_ES_PREFILTER=0 disables the h1-only duplicate-candidate
-      // prefilter (the round-6 exchange cut) for interleaved A/B runs
       val anchor = sys.env.get("SPARK_GRAFT_ES_ANCHOR").map(_.toInt)
       ExactSubstrDedup(docs, "doc_id", "text",
-        ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = anchor,
-          prefilterDupHashes = esPf))
+        ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = anchor))
         .filter(!col("exact_substr_keep")).count()
     }
 
@@ -164,8 +152,7 @@ object ScaleEvidence {
       // #6): winnowing anchors at w=8 sample ~2/(w+1) of the stride-1
       // spans content-defined, so copies anchor identically
       ExactSubstrDedup(docs, "doc_id", "text",
-        ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8),
-          prefilterDupHashes = esPf))
+        ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8)))
         .filter(!col("exact_substr_keep")).count()
     }
 

@@ -9,75 +9,20 @@ import graft.text.{PyText, TextKernels, Tokenizer}
 /** Exact and URL dedup — the simple shuffling dedup operators. */
 object ExactDedup {
 
-  /** Exact-text dedup via hash groupBy: annotate each row with the
-    * surviving doc id (min id per identical text) and a keep flag.
-    * Collision-safe two-level key: group on the 64-bit text hash, compare
-    * full text within hash groups. */
-  /** Scale shape (round 6): the [[DupCandidates]] prefilter shuffles ONLY
-    * the 8-byte text hash to find hashes occurring more than once — on a
-    * mostly-unique web corpus the full TEXT column then never rides any
-    * exchange OR broadcast: candidate rows broadcast-semi-join against
-    * the (small, hash-only) duplicated-hash set, the min-id representative
-    * is computed over candidates alone and joined back within the
-    * candidate subset (both sides small; AQE picks the strategy — no
-    * payload is ever hint-broadcast), and the non-candidate majority is
-    * split off with the REUSED broadcast as a left-anti probe, each row
-    * its own survivor with no join at all. Result-identical: a
-    * corpus-unique hash's row is the single member of its (hash, text)
-    * group, i.e. its own min-id representative. groupBy-min keeps the
-    * hot-text safety (map-side partial agg absorbs mass-duplicated
-    * boilerplate; a Window.partitionBy would sort the whole hot group on
-    * one reducer). Cost: the input lineage is scanned three times (count,
-    * semi, anti) instead of twice. `prefilterDupKeys = false` restores
-    * the r5 single-pass groupBy(hash, text) + join-back shape. Round 7:
-    * the mass-dup escape is no longer only a manual flag — the prefilter
-    * goes through [[DupCandidates.guardedDupKeys]], which sizes the
-    * duplicated-hash set at runtime (one key-only count action over a
-    * persisted aggregate, so the semi and anti probes reuse one
-    * computation) and falls back to the single-pass shape by itself when
-    * the set would not fit a broadcast. */
-  def apply(df: DataFrame, idCol: String, textCol: String,
-            prefilterDupKeys: Boolean = true): DataFrame = {
-    val hashed = df.withColumn("__th", xxhash64(col(textCol)))
-    def singlePass(): DataFrame = {
-      val reps = hashed.groupBy(col("__th"), col(textCol).as("__tt"))
-        .agg(min(col(idCol)).as("exact_dup_rep"))
-      hashed
-        .join(reps, hashed("__th") <=> reps("__th") && col(textCol) <=> col("__tt"))
-        .drop(reps("__th")).drop("__tt")
-    }
-    val guarded: Option[DataFrame] =
-      if (prefilterDupKeys)
-        DupCandidates.guardedDupKeys(hashed.select("__th"), Seq("__th"),
-          "exactdedup.dupth").keys
-      else None
-    val annotated = guarded match {
-      case Some(dupTh) =>
-        val cand = hashed.join(broadcast(dupTh), Seq("__th"), "left_semi")
-        val reps = cand
-          .select(col("__th"), col(textCol).as("__tt"), col(idCol).as("__cid"))
-          .groupBy(col("__th"), col("__tt"))
-          .agg(min(col("__cid")).as("exact_dup_rep"))
-        val candAnnot = cand
-          // null-safe keys: rows with null text must survive the join (a
-          // plain === would silently drop them)
-          .join(reps, cand("__th") <=> reps("__th") && col(textCol) <=> col("__tt"))
-          .drop(reps("__th")).drop("__tt")
-        val rest = hashed.join(broadcast(dupTh), Seq("__th"), "left_anti")
-          .withColumn("exact_dup_rep", col(idCol))
-        candAnnot.unionByName(rest)
-      case None => singlePass()
-    }
-    annotated
-      // null text is UNKNOWN content, not identical content — pass such rows
-      // through as their own survivors instead of deduping them against
-      // each other (which would silently drop all but one)
-      .withColumn("exact_dup_rep",
-        when(col(textCol).isNull, col(idCol))
-          .otherwise(coalesce(col("exact_dup_rep"), col(idCol))))
-      .withColumn("exact_keep", col("exact_dup_rep") === col(idCol))
-      .drop("__th")
-  }
+  /** Exact-text dedup: annotate each row with the surviving doc id (min id
+    * per identical text, `exact_dup_rep`) and a keep flag (`exact_keep`).
+    * Runs [[DupCandidates.firstWins]] keyed on the 64-bit text hash with
+    * the text as the confirm column, so full-text equality is compared
+    * only among rows whose hash occurs more than once: on a mostly-unique
+    * web corpus the text column never rides an exchange or a broadcast,
+    * and a hash collision never merges two different texts. The
+    * duplicated-hash set is sized at runtime; a mass-dup corpus whose set
+    * would not fit a broadcast takes the single-pass groupBy(hash, text)
+    * + join-back shape by itself. A null text is unknown content, not
+    * identical content: such rows are their own survivors. */
+  def apply(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    DupCandidates.firstWins(df, xxhash64(col(textCol)), textCol, Nil,
+      idCol, "exact_dup_rep", "exact_keep")
 }
 
 /** dedup/url_dedup.py:45-62 — keep the highest-priority row per normalized
@@ -101,14 +46,13 @@ object UrlDedup {
 
   private val normalizeUdf = udf(normalizeUrl _)
 
-  /** Scale shape: a hot normalized url (mass-crawled page) would make a
-    * Window.partitionBy sort its whole group on one reducer; the groupBy
-    * min-struct aggregates map-side and the join back is AQE-skew-splittable.
-    * Priority must be numeric (the reference's is an int). */
+  /** Annotate each row with `url_dup_rep` (the id of the best row of its
+    * url group) and `url_keep`. Priority must be numeric (the reference's
+    * is an int). */
   def apply(df: DataFrame, urlCol: String, idCol: String, priorityCol: String,
-            normalize: Boolean = false, prefilterDupKeys: Boolean = true): DataFrame =
+            normalize: Boolean = false): DataFrame =
     applyWithKey(df, if (normalize) normalizeUdf(col(urlCol)) else col(urlCol),
-      idCol, priorityCol, prefilterDupKeys = prefilterDupKeys)
+      idCol, priorityCol)
 
   /** url_normalizer seam (url_dedup.py's UrlDedupConfig.url_normalizer is an
     * arbitrary callable): dedup on a caller-supplied key expression. */
@@ -118,56 +62,22 @@ object UrlDedup {
     applyWithKey(df, nUdf(col(urlCol)), idCol, priorityCol)
   }
 
+  /** [[DupCandidates.firstWins]] keyed on the 64-bit hash of the
+    * normalised url, with the url string as the confirm column: only rows
+    * whose url hash occurs more than once reach the best-of aggregate,
+    * the url string is compared only there, and no frame carrying it is
+    * hint-broadcast. The rank is min over (priority is null, -priority,
+    * id) = highest non-null priority, nulls last, ties to the smallest id.
+    * Negation assumes a sane numeric priority (the reference's is a small
+    * int); Long.MinValue priorities are out of contract. A null url is an
+    * unknown page, not THE SAME page: such rows pass through as their own
+    * survivors. */
   private def applyWithKey(df: DataFrame, keyCol: Column, idCol: String,
-                           priorityCol: String, keepKey: Boolean = false,
-                           prefilterDupKeys: Boolean = true): DataFrame = {
-    val keyed = df.withColumn("__ukey", keyCol)
-    // DupCandidates prefilter (same argument as ExactDedup): a key+count
-    // pass finds urls occurring more than once, the best-priority
-    // representative is computed over those candidates only, and every
-    // unique url is its own survivor through the LEFT join's coalesce —
-    // the unique majority never rides the best-of exchange, and the
-    // join-back side shrinks to the dup groups. Round 7: runtime-guarded —
-    // when the duplicated-url set would not fit a broadcast the guard
-    // hands back None and this call degrades to the single-pass shape
-    // instead of OOMing inside the default config.
-    val guarded: Option[DataFrame] =
-      if (prefilterDupKeys)
-        DupCandidates.guardedDupKeys(keyed.select("__ukey"), Seq("__ukey"),
-          "urldedup.dupkeys").keys
-      else None
-    val prefilterActive = guarded.isDefined
-    val cand = guarded match {
-      case Some(dk) =>
-        keyed.select(col("__ukey"), col(priorityCol), col(idCol))
-          .join(broadcast(dk), Seq("__ukey"), "left_semi")
-      case None => keyed
-    }
-    // min over (priority-is-null, -priority, id) = highest non-null priority,
-    // nulls last (matching the old orderBy(desc) semantics), ties to the
-    // smallest id. Negation assumes a sane numeric priority (the reference's
-    // is a small int); Long.MinValue priorities are out of contract.
-    val best = cand.groupBy("__ukey")
-      .agg(min(struct(col(priorityCol).isNull.as("pn"),
-        (-col(priorityCol)).as("np"), col(idCol).as("bid"))).as("__b"))
-      .select(col("__ukey").as("__bkey"), col("__b.bid").as("url_dup_rep"))
-    keyed
-      // null-safe key join: null-url rows keep flowing through the operator.
-      // With the prefilter, best holds one (dup url, winner id) row per
-      // duplicated url group — at most guardedDupKeys' nDupKeys rows of
-      // key-sized payload, so the hint stays within the (now
-      // runtime-enforced) DupCandidates broadcast contract and the corpus
-      // side never shuffles for this join
-      .join(if (prefilterActive) broadcast(best) else best,
-        col("__ukey") <=> col("__bkey"),
-        if (prefilterActive) "left" else "inner")
-      // a null url is an unknown page, not THE SAME page — pass through;
-      // prefiltered-out unique urls are their own survivors
-      .withColumn("url_dup_rep",
-        when(col("__ukey").isNull, col(idCol))
-          .otherwise(coalesce(col("url_dup_rep"), col(idCol))))
-      .withColumn("url_keep", col("url_dup_rep") === col(idCol))
-      .drop((if (keepKey) Seq("__bkey") else Seq("__ukey", "__bkey")): _*)
+                           priorityCol: String, keepKey: Boolean = false): DataFrame = {
+    val out = DupCandidates.firstWins(df.withColumn("__ukey", keyCol),
+      xxhash64(col("__ukey")), "__ukey",
+      Seq(col(priorityCol).isNull, -col(priorityCol)), idCol, "url_dup_rep", "url_keep")
+    if (keepKey) out else out.drop("__ukey")
   }
 
   /** UrlDedup against a PRE-BUILT url index (url_dedup.py index_folder):

@@ -57,42 +57,38 @@ import graft.text.Tokenizer
   *   switches to groupBy-min + join-back: the min uses map-side partial
   *   aggregation (hot keys combine before the exchange) and the join-back
   *   is AQE-skew-splittable. Costs a second shuffle of the span table.
-  *   Round 7: no longer only manual — when the prefilter's count pass runs
-  *   (prefilterDupHashes=true, the default) the max per-hash occurrence
-  *   count comes out of the same aggregate for free, and the operator
-  *   flips to groupBy-min BY ITSELF above
+  *   Round 7: no longer only manual — the prefilter's count pass yields
+  *   the max per-hash occurrence count from the same aggregate for free,
+  *   and the operator flips to groupBy-min BY ITSELF above
   *   `spark.graft.exactsubstr.hotKeyThreshold` (default 10^6 ≈ the rows
   *   one reducer can stream per minute); this flag forces the shape ON
-  *   regardless. With the prefilter off there is no count pass, so the
-  *   flag stays the only switch. */
-/** @param prefilterDupHashes duplicate-candidate prefilter: before the
-  *   (h1, h2) first-occurrence pass, a first job shuffles ONLY `__h1`
-  *   (8-byte key, map-side count combine — no sort) to find the hash
-  *   values that occur more than once, and the span table is then
-  *   broadcast-LEFT-SEMI-joined against that (small) duplicated-hash set,
-  *   so the fat (doc, pos, h1, h2) rows of the ~unique majority never
-  *   enter the window exchange or its sort. Provably result-identical:
-  *   a span row whose h1 is corpus-unique is the single row of its
-  *   (h1, h2) group, i.e. its own first occurrence, and the
-  *   `!= __first` cut discards it anyway; 64-bit h1 false candidates
-  *   (expected pairs n²/2^65 ≪ 1 below ~10^9 spans) only pass harmless
-  *   extra rows to the exact 128-bit pass. The trade: spans are computed
-  *   twice (tokenize + word-hash re-run, CPU-cheap vs the exchange) and
-  *   the duplicated-hash set must fit a broadcast — ENFORCED at runtime
-  *   since round 7: the count pass goes through
-  *   [[DupCandidates.guardedDupKeys]], and when the duplicated-span set
-  *   exceeds `spark.graft.dedup.maxBroadcastKeys` the prefilter disables
-  *   itself for this run (falling back to the round-5 full-table window
-  *   shape) instead of OOMing; mass-dup corpora can still pre-emptively
-  *   turn it off, or run the anchored posture, whose span table is
-  *   already ~2/(w+1) of stride-1. Composes with either min strategy. */
+  *   regardless. */
+/** Duplicate-candidate prefilter (always on): before the (h1, h2)
+  * first-occurrence pass, a first job shuffles ONLY `__h1` (8-byte key,
+  * map-side count combine — no sort) to find the hash values that occur
+  * more than once, and the span table is then broadcast-LEFT-SEMI-joined
+  * against that (small) duplicated-hash set, so the fat (doc, pos, h1, h2)
+  * rows of the ~unique majority never enter the window exchange or its
+  * sort. Provably result-identical: a span row whose h1 is corpus-unique
+  * is the single row of its (h1, h2) group, i.e. its own first
+  * occurrence, and the `!= __first` cut discards it anyway; 64-bit h1
+  * false candidates (expected pairs n²/2^65 ≪ 1 below ~10^9 spans) only
+  * pass harmless extra rows to the exact 128-bit pass. The trade: spans
+  * are computed twice (tokenize + word-hash re-run, CPU-cheap vs the
+  * exchange) and the duplicated-hash set must fit a broadcast — ENFORCED
+  * at runtime since round 7: the count pass goes through
+  * [[DupCandidates.guardedDupKeys]], and when the duplicated-span set
+  * exceeds `spark.graft.dedup.maxBroadcastKeys` (or the budget is 0) the
+  * prefilter disables itself for this run, falling back to the round-5
+  * full-table window shape instead of OOMing; the anchored posture's span
+  * table is already ~2/(w+1) of stride-1. Composes with either min
+  * strategy. */
 final case class ExactSubstrConfig(
     spanWords: Int = 50,
     minDocWords: Int = 50,
     shortSpanWords: Option[Int] = None,
     anchorEvery: Option[Int] = None,
-    hotKeyGroupByMin: Boolean = false,
-    prefilterDupHashes: Boolean = true)
+    hotKeyGroupByMin: Boolean = false)
 
 object ExactSubstrDedup {
 
@@ -229,46 +225,42 @@ object ExactSubstrDedup {
     // re-deriving h1 from the full span-row lineage; spanH1FromWordHashes
     // is property-pinned equal to the full stream's h1, and the fold/
     // anchor logic below mirrors the span UDFs line for line.
-    val guardStats: Option[DupCandidates.Guarded] =
-      if (!cfg.prefilterDupHashes) None
+    val h1Udf = udf { text: String =>
+      if (text == null) Array.empty[Long]
       else {
-        val h1Udf = udf { text: String =>
-          if (text == null) Array.empty[Long]
-          else {
-            val h = Tokenizer.words(text).map(graft.functions.Hashes.xxhash64)
-            val a = anchorW.map(anchorPositions(h, _))
-            def kept(l: Int): Array[Long] = {
-              val s = spanH1FromWordHashes(h, l)
-              a match {
-                case Some(anch) =>
-                  val out = new scala.collection.mutable.ArrayBuilder.ofLong
-                  var i = 0
-                  while (i < s.length) { if (anch(i)) out += s(i); i += 1 }
-                  out.result()
-                case None => s
-              }
-            }
-            if (!multi) kept(sw)
-            else lengths.toArray.flatMap(l =>
-              kept(l).map(_ + l * 0x9E3779B97F4A7C15L))
+        val h = Tokenizer.words(text).map(graft.functions.Hashes.xxhash64)
+        val a = anchorW.map(anchorPositions(h, _))
+        def kept(l: Int): Array[Long] = {
+          val s = spanH1FromWordHashes(h, l)
+          a match {
+            case Some(anch) =>
+              val out = new scala.collection.mutable.ArrayBuilder.ofLong
+              var i = 0
+              while (i < s.length) { if (anch(i)) out += s(i); i += 1 }
+              out.result()
+            case None => s
           }
         }
-        Some(DupCandidates.guardedDupKeys(
-          df.select(explode(h1Udf(col(textCol))).as("__h1")), Seq("__h1"),
-          "exactsubstr.duph1"))
+        if (!multi) kept(sw)
+        else lengths.toArray.flatMap(l =>
+          kept(l).map(_ + l * 0x9E3779B97F4A7C15L))
       }
+    }
+    val guardStats = DupCandidates.guardedDupKeys(
+      df.select(explode(h1Udf(col(textCol))).as("__h1")), Seq("__h1"),
+      "exactsubstr.duph1")
     // runtime decisions off the guard's one sizing action: the prefilter
     // is active only when the duplicated-hash set fit the broadcast
     // budget, and the window-min flips to groupBy-min automatically when
     // the hottest span hash exceeds the streaming-reducer threshold (the
     // guard's maxKeyCount statistic is valid even when the key set was
     // over budget, so the auto-flip survives the fallback too)
-    val dupH1: Option[DataFrame] = guardStats.flatMap(_.keys)
+    val dupH1: Option[DataFrame] = guardStats.keys
     val prefilterActive = dupH1.isDefined
     val hotKeyThreshold = spark.conf
       .get("spark.graft.exactsubstr.hotKeyThreshold", "1000000").toLong
     val useGroupByMin = cfg.hotKeyGroupByMin ||
-      guardStats.exists(_.maxKeyCount > hotKeyThreshold)
+      guardStats.maxKeyCount > hotKeyThreshold
     def prefilter(spans: DataFrame): DataFrame =
       dupH1.map(d => spans.join(broadcast(d), Seq("__h1"), "left_semi"))
         .getOrElse(spans)

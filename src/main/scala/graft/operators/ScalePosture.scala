@@ -11,10 +11,12 @@ package graft.operators
   *  - AQE + skew-join + partition coalescing ON — runtime re-planning is
   *    the only defense local measurement can't pre-compute at 1000
   *    executors;
-  *  - the dedup-family duplicate-candidate prefilters (exact/url/ES; the
-  *    sentence first-wins pass has none), behind the runtime
-  *    broadcast guard (spark.graft.dedup.maxBroadcastKeys) so a mass-dup
-  *    corpus degrades to single-pass instead of OOMing;
+  *  - the dedup-family duplicate-candidate prefilters, which have no
+  *    switch: exact and url through DupCandidates.firstWins on a 64-bit
+  *    hash key (the text / url string confirmed on candidates only), ES
+  *    on its 64-bit h1 span hash; the sentence first-wins pass has none.
+  *    The runtime broadcast guard (spark.graft.dedup.maxBroadcastKeys)
+  *    degrades a mass-dup corpus to single-pass instead of OOMing;
   *  - ExactSubstr in the ANCHORED mode (winnowing w=8 + the 15-word short
   *    span): 55.4 s / 3.55 GB at 2M vs 243 s / 12.1 GB stride-1 — the
   *    documented scale path past the span-explode ceiling — with the

@@ -127,27 +127,28 @@ class ExactSubstrGcSpec extends SparkSpec {
       Seq((300L, (words(30, 62) ++ shared).mkString(" ")),
           (301L, (shared ++ words(30, 63)).mkString(" "))))
       .toDF("doc_id", "text").repartition(4)
+    def run(variant: ExactSubstrConfig) = ExactSubstrDedup(docs, "doc_id", "text", variant)
+      .select("doc_id", "exact_substr_keep", "n_removed_words", "text")
+      .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getInt(2), r.getString(3)))).toMap
+    // the single-pass (no-prefilter) shape: a zero key budget
+    def singlePass[T](body: => T): T = {
+      spark.conf.set(DupCandidates.MaxBroadcastKeysConf, "0")
+      try body finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
+    }
     for (cfg <- Seq(
         ExactSubstrConfig(),
         ExactSubstrConfig(shortSpanWords = Some(15)),
         ExactSubstrConfig(anchorEvery = Some(8)),
         // the combined config is exactly what ScaleEvidence's anchored
-        // posture runs with prefilterDupHashes=true — the lean h1 UDF's
+        // posture runs with the prefilter on — the lean h1 UDF's
         // anchored+salted multi-length path must stay property-pinned to
         // the full span UDF (ADVICE r6)
         ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8)))) {
-      val base = ExactSubstrDedup(docs, "doc_id", "text", cfg)
-        .select("doc_id", "exact_substr_keep", "n_removed_words", "text")
-        .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getInt(2), r.getString(3)))).toMap
-      for (variant <- Seq(
-          cfg.copy(hotKeyGroupByMin = true),
-          cfg.copy(prefilterDupHashes = false),
-          cfg.copy(hotKeyGroupByMin = true, prefilterDupHashes = false))) {
-        val alt = ExactSubstrDedup(docs, "doc_id", "text", variant)
-          .select("doc_id", "exact_substr_keep", "n_removed_words", "text")
-          .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getInt(2), r.getString(3)))).toMap
-        assert(base == alt, s"strategies diverge for $variant")
-      }
+      val base = run(cfg)
+      assert(base == run(cfg.copy(hotKeyGroupByMin = true)), s"groupBy-min diverges for $cfg")
+      assert(base == singlePass(run(cfg)), s"single pass diverges for $cfg")
+      assert(base == singlePass(run(cfg.copy(hotKeyGroupByMin = true))),
+        s"single-pass groupBy-min diverges for $cfg")
     }
   }
 

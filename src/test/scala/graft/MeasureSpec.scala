@@ -37,6 +37,9 @@ class MeasureSpec extends SparkSpec {
     assert(r.labelMismatches == 0)
     assert(r.guardedKept == r.fallbackKept)
     assert(r.guardedKept < 400)
+    // UrlDedup, the helper's other caller: 100 url groups of 4 docs
+    assert(r.urlGuardedKept == r.urlFallbackKept)
+    assert(r.urlGuardedKept == 100)
   }
 
   test("exact-substr: one output row per input doc, later copies of a shared passage cut") {

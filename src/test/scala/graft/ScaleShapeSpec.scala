@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -12,6 +14,30 @@ class ScaleShapeSpec extends SparkSpec {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The single-pass reference shape of every guarded dedup operator: a
+    * zero key budget broadcasts nothing. */
+  private def singlePass[T](body: => T): T = {
+    spark.conf.set(DupCandidates.MaxBroadcastKeysConf, "0")
+    try body finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
+  }
+
+  private def snap(d: org.apache.spark.sql.DataFrame, cols: String*) =
+    d.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+  /** Mixed corpus: a mass-duplicated text, a 2-copy text, uniques, null
+    * text/url/priority, url priority ties — every branch of the
+    * candidate/rest split and the null pass-through. */
+  private def mixedCorpus() = {
+    val rows = (0 until 40).map { i =>
+      val text = if (i < 10) "common boilerplate body" else if (i < 12) "twice body" else s"unique body $i"
+      val url = if (i % 7 == 0) "https://Dup.example/x?q=1" else s"https://u$i.example/p"
+      val prio: java.lang.Long = if (i % 5 == 0) null else java.lang.Long.valueOf((i % 3).toLong)
+      (i.toLong, text, url, prio)
+    } ++ Seq((100L, null.asInstanceOf[String], null.asInstanceOf[String], java.lang.Long.valueOf(1L)),
+             (101L, null.asInstanceOf[String], null.asInstanceOf[String], null.asInstanceOf[java.lang.Long]))
+    rows.toDF("doc_id", "text", "url", "prio").repartition(4)
+  }
 
   test("hardTopByTokens: no WindowExec in the plan, answer matches local prefix sum") {
     val rng = new scala.util.Random(7)
@@ -165,29 +191,16 @@ class ScaleShapeSpec extends SparkSpec {
     // defeat the point)
     assert(esPlan.matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"),
       "prefilter must be a broadcast left-semi join against the dup-hash set")
-    val esNoPf = planOf(ExactSubstrDedup(docs, "doc_id", "text",
-      ExactSubstrConfig(prefilterDupHashes = false)))
-    assert(!esNoPf.contains("LeftSemi"), "prefilter off must remove the semi-join")
+    val esNoPf = singlePass(planOf(ExactSubstrDedup(docs, "doc_id", "text")))
+    assert(!esNoPf.contains("LeftSemi"), "a zero key budget must remove the semi-join")
   }
 
   test("dedup-family duplicate-candidate prefilter agrees with the single-pass shape") {
-    // mixed corpus: a mass-duplicated text, a 2-copy text, uniques, null
-    // text/url/priority, url priority ties — every branch of the
-    // coalesce/left-join rewrite
-    val rows = (0 until 40).map { i =>
-      val text = if (i < 10) "common boilerplate body" else if (i < 12) "twice body" else s"unique body $i"
-      val url = if (i % 7 == 0) "https://Dup.example/x?q=1" else s"https://u$i.example/p"
-      val prio: java.lang.Long = if (i % 5 == 0) null else java.lang.Long.valueOf((i % 3).toLong)
-      (i.toLong, text, url, prio)
-    } ++ Seq((100L, null.asInstanceOf[String], null.asInstanceOf[String], java.lang.Long.valueOf(1L)),
-             (101L, null.asInstanceOf[String], null.asInstanceOf[String], null.asInstanceOf[java.lang.Long]))
-    val df = rows.toDF("doc_id", "text", "url", "prio").repartition(4)
-    def snap(d: org.apache.spark.sql.DataFrame, cols: String*) =
-      d.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val df = mixedCorpus()
     assert(snap(ExactDedup(df, "doc_id", "text"), "doc_id", "exact_keep", "exact_dup_rep") ==
-      snap(ExactDedup(df, "doc_id", "text", prefilterDupKeys = false), "doc_id", "exact_keep", "exact_dup_rep"))
+      singlePass(snap(ExactDedup(df, "doc_id", "text"), "doc_id", "exact_keep", "exact_dup_rep")))
     assert(snap(UrlDedup(df, "url", "doc_id", "prio", normalize = true), "doc_id", "url_keep", "url_dup_rep") ==
-      snap(UrlDedup(df, "url", "doc_id", "prio", normalize = true, prefilterDupKeys = false), "doc_id", "url_keep", "url_dup_rep"))
+      singlePass(snap(UrlDedup(df, "url", "doc_id", "prio", normalize = true), "doc_id", "url_keep", "url_dup_rep")))
     // plan pins: the prefilter must reach the min pass as a broadcast
     // LEFT-SEMI on ONE node (a shuffled semi would re-shuffle the table it
     // exists to protect), and the non-candidate split must be a broadcast
@@ -195,8 +208,26 @@ class ScaleShapeSpec extends SparkSpec {
     val p = planOf(ExactDedup(df, "doc_id", "text"))
     assert(p.matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"), p.take(400))
     assert(p.matches("(?s).*BroadcastHashJoin[^\\n]*LeftAnti.*"), p.take(400))
-    assert(planOf(UrlDedup(df, "url", "doc_id", "prio"))
-      .matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"))
+    val pu = planOf(UrlDedup(df, "url", "doc_id", "prio"))
+    assert(pu.matches("(?s).*BroadcastHashJoin[^\\n]*LeftSemi.*"), pu.take(400))
+    assert(pu.matches("(?s).*BroadcastHashJoin[^\\n]*LeftAnti.*"), pu.take(400))
+  }
+
+  test("firstWins: every key collides — the confirm column alone separates the groups") {
+    // key lit(0L): every row is a candidate of one duplicated key, so only
+    // the confirm step keeps different texts / urls apart — the property
+    // that makes a 64-bit url key safe
+    val df = mixedCorpus()
+    val exact = DupCandidates.firstWins(df, lit(0L), "text", Nil,
+      "doc_id", "exact_dup_rep", "exact_keep")
+    assert(planOf(exact).contains("LeftSemi"), "one colliding key must take the candidate path")
+    assert(snap(exact, "doc_id", "exact_keep", "exact_dup_rep") ==
+      singlePass(snap(ExactDedup(df, "doc_id", "text"), "doc_id", "exact_keep", "exact_dup_rep")))
+    val url = DupCandidates.firstWins(df, lit(0L), "url",
+      Seq(col("prio").isNull, -col("prio")), "doc_id", "url_dup_rep", "url_keep")
+    assert(planOf(url).contains("LeftSemi"))
+    assert(snap(url, "doc_id", "url_keep", "url_dup_rep") ==
+      singlePass(snap(UrlDedup(df, "url", "doc_id", "prio"), "doc_id", "url_keep", "url_dup_rep")))
   }
 
   test("guardedDupKeys: sizes the key set in one action and withholds the broadcast over budget") {
@@ -218,41 +249,35 @@ class ScaleShapeSpec extends SparkSpec {
     } finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
   }
 
-  test("guardedDupKeys: string keys are sized in BYTES too (ADVICE r7 #1)") {
-    // two duplicated ~60-byte string keys: far under the count budget, but
-    // over a 100-byte byte budget — the guard must withhold the broadcast
-    val longA = "https://example.com/" + ("a" * 40)
-    val longB = "https://example.com/" + ("b" * 40)
-    val df = Seq(longA, longA, longB, longB, "u1", "u2").toDF("k")
-    val ok = DupCandidates.guardedDupKeys(df, Seq("k"), "spec.guard.bytes.ok")
-    assert(ok.keys.isDefined && ok.nDupKeys == 2)
-    spark.conf.set(DupCandidates.MaxBroadcastKeyBytesConf, "100")
+  test("guardedDupKeys: a variable-width key is refused before any job runs") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener { // only this test's jobs, not a background query's
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "guard_refusal")) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    spark.sparkContext.setJobGroup("guard_refusal", "guard_refusal")
     try {
-      val over = DupCandidates.guardedDupKeys(df, Seq("k"), "spec.guard.bytes.over")
-      assert(over.keys.isEmpty, "120 key bytes must exceed the 100-byte budget")
-      assert(over.nDupKeys == 2 && over.maxKeyCount == 2)
-      // long keys but all-unique: nothing duplicated, nothing to broadcast —
-      // stays under any byte budget
-      val uniq = DupCandidates.guardedDupKeys(
-        Seq(longA + "1", longB + "2").toDF("k"), Seq("k"), "spec.guard.bytes.uniq")
-      assert(uniq.keys.isDefined && uniq.nDupKeys == 0)
-      // UrlDedup end-to-end: over the byte budget it must degrade to the
-      // single-pass shape with unchanged answers (same pinning as the
-      // count-budget test above)
-      val rows = (0 until 20).map { i =>
-        (i.toLong, s"https://host${('a' + i % 4).toChar}.example/" + ("p" * 50),
-          java.lang.Long.valueOf((i % 3).toLong))
-      }
-      val udf0 = rows.toDF("doc_id", "url", "prio").repartition(4)
-      def snap(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("doc_id"), col("url_keep"), col("url_dup_rep"))
-          .collect().map(_.toSeq).toSet
-      val ref = snap(UrlDedup(udf0, "url", "doc_id", "prio", prefilterDupKeys = false))
-      val guardedRun = UrlDedup(udf0, "url", "doc_id", "prio")
-      assert(!guardedRun.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        "over the byte budget, UrlDedup must take the single-pass shape")
-      assert(snap(guardedRun) == ref)
-    } finally spark.conf.unset(DupCandidates.MaxBroadcastKeyBytesConf)
+      val urls = Seq("https://a.example/x", "https://a.example/x", "https://b.example/y").toDF("k")
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val e = intercept[IllegalArgumentException](
+        DupCandidates.guardedDupKeys(urls, Seq("k"), "spec.guard.string"))
+      assert(e.getMessage.contains("fixed width"), e.getMessage)
+      ListenerBusDrain(spark.sparkContext)
+      assert(jobs.get == 0, s"${jobs.get} jobs before the refusal")
+      // control: the counter does see this group's jobs — a Long key of
+      // the same shape runs its sizing action
+      DupCandidates.guardedDupKeys(urls.select(xxhash64(col("k")).as("k")), Seq("k"),
+        "spec.guard.long")
+      ListenerBusDrain(spark.sparkContext)
+      assert(jobs.get > 0)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(counter)
+    }
   }
 
   test("runtime broadcast guard: mass-dup corpus degrades every default dedup config to the single-pass shape") {
@@ -269,15 +294,11 @@ class ScaleShapeSpec extends SparkSpec {
       (i.toLong, text, s"https://host$v.example/page", java.lang.Long.valueOf((i % 3).toLong))
     }
     val df = rows.toDF("doc_id", "text", "url", "prio").repartition(4)
-    def snap(d: org.apache.spark.sql.DataFrame, cols: String*) =
-      d.select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    val exactRef = snap(ExactDedup(df, "doc_id", "text", prefilterDupKeys = false),
-      "doc_id", "exact_keep", "exact_dup_rep")
-    val urlRef = snap(UrlDedup(df, "url", "doc_id", "prio", prefilterDupKeys = false),
-      "doc_id", "url_keep", "url_dup_rep")
-    val esRef = snap(ExactSubstrDedup(df, "doc_id", "text",
-      ExactSubstrConfig(spanWords = 4, minDocWords = 2, prefilterDupHashes = false)),
-      "doc_id", "exact_substr_keep", "text")
+    val (exactRef, urlRef, esRef) = singlePass((
+      snap(ExactDedup(df, "doc_id", "text"), "doc_id", "exact_keep", "exact_dup_rep"),
+      snap(UrlDedup(df, "url", "doc_id", "prio"), "doc_id", "url_keep", "url_dup_rep"),
+      snap(ExactSubstrDedup(df, "doc_id", "text", ExactSubstrConfig(spanWords = 4, minDocWords = 2)),
+        "doc_id", "exact_substr_keep", "text")))
     spark.conf.set(DupCandidates.MaxBroadcastKeysConf, "1")
     try {
       val exact = ExactDedup(df, "doc_id", "text")
