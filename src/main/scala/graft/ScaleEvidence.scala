@@ -138,12 +138,10 @@ object ScaleEvidence {
     phase("exact_substr") {
       // rolling-hash span dedup incl. the round-5 short-span pass — the
       // heaviest text-CPU dedup (tokenize + per-word hash + two span
-      // streams per doc), ids+positions only through the shuffle
-      // SPARK_GRAFT_ES_ANCHOR=<w> measures the winnowing-anchored scale
-      // path (content-defined span sampling, ~2/(w+1) of the rows)
-      val anchor = sys.env.get("SPARK_GRAFT_ES_ANCHOR").map(_.toInt)
+      // streams per doc), ids+positions only through the shuffle; stride-1
+      // (every span start), where exact_substr_anchored below winnows
       ExactSubstrDedup(docs, "doc_id", "text",
-        ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = anchor))
+        ExactSubstrConfig(shortSpanWords = Some(15)))
         .filter(!col("exact_substr_keep")).count()
     }
 

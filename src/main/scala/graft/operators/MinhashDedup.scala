@@ -176,7 +176,7 @@ object MinhashDedup {
     * string to 16 bytes (measured 3.6 GB → ~0.7 GB at 2M docs). False
     * band-equality needs both 64-bit folds to collide: ~2^-128 per pair, ≪1
     * expected even at 10^12 docs × 14 bands (same analysis as
-    * ExactSubstrDedup.spanHashes). */
+    * ExactSubstrDedup.spanHashesFromWordHashes). */
   private[graft] def foldBands(mins: Array[Long], nb: Int, hpb: Int): Array[(Long, Long)] = {
     val out = new Array[(Long, Long)](nb)
     var bi = 0

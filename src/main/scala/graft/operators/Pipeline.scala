@@ -121,11 +121,8 @@ final class QualityPipeline(
   }
 
   /** Per-partition lineage metrics (north rule): drop-reason counts per
-    * stage per partition, computed from the result in one aggregation. */
-  def metrics(result: Dataset[PipeDoc]): DataFrame = metricsOf(result.toDF())
-
-  /** Same, over an already-materialized verdict table (e.g. a committed
-    * checkpoint read back on resume). */
+    * stage per partition, computed in one aggregation over a verdict table
+    * (a run's result, or a committed checkpoint read back on resume). */
   def metricsOf(result: DataFrame): DataFrame =
     result
       .withColumn("partition_id", spark_partition_id())

@@ -25,16 +25,6 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   */
 object Similarity {
 
-  /** cos(a,b) as a native column expression (arrays cast to double;
-    * left-to-right accumulation — bit-compatible with the DuckDB oracle). */
-  def cosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val dot = aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"), _ * _),
-      lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(a.cast("array<double>"), x => x * x), lit(0.0), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(b.cast("array<double>"), x => x * x), lit(0.0), (acc, x) => acc + x))
-    dot / (na * nb)
-  }
-
   private def normCol(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sqrt(aggregate(transform(v.cast("array<double>"), x => x * x), lit(0.0), (acc, x) => acc + x))
 
@@ -502,8 +492,9 @@ object Similarity {
     // null-safe-joined on the full array<float>). False identity needs
     // both 64-bit hashes to collide on different vectors: ~2^-128 per
     // pair, ≪ 1 expected even at 10^12 rows — the same analysis as the
-    // minhash band folds and ExactSubstrDedup.spanHashes. The fat table
-    // is touched by one broadcastable semi-join (rep ids) only.
+    // minhash band folds and ExactSubstrDedup.spanHashesFromWordHashes.
+    // The fat table is touched by one broadcastable semi-join (rep ids)
+    // only.
     val v = col(vecCol).cast("array<float>")
     val slim = df.select(col(idCol), xxhash64(v).as("__vh1"),
       xxhash64(v, lit(0x9E3779B97F4A7C15L)).as("__vh2"))

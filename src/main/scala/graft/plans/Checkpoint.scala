@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Stage-level resumability (north rule: resumable from the last committed
@@ -19,10 +20,10 @@ final class Checkpoint(val baseDir: String)(implicit spark: SparkSession) {
 
   def stagePath(name: String): String = s"$baseDir/$name"
 
-  def isCommitted(name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(stagePath(name), "_SUCCESS")
+  def isCommitted(name: String): Boolean = exists(new Path(stagePath(name), "_SUCCESS"))
+
+  private def exists(p: Path): Boolean =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** Run `compute` unless this stage already committed; either way return
     * the committed result (reading back decouples downstream stages from
@@ -47,9 +48,12 @@ final class Checkpoint(val baseDir: String)(implicit spark: SparkSession) {
 
   /** Read a previously-written metrics table; None when absent OR
     * unreadable (a torn write from a killed run must not fail the job
-    * that is trying to replace it). */
+    * that is trying to replace it). Absence is checked first: Spark's
+    * reader logs a missing path with a FileNotFoundException stack, which
+    * made a clean first run look failed. */
   def readMetrics(name: String): Option[DataFrame] =
-    try {
+    if (!exists(new Path(metricsPath(name)))) None
+    else try {
       val df = spark.read.parquet(metricsPath(name))
       df.collect() // force read errors (corrupt footer) to surface HERE
       Some(df)

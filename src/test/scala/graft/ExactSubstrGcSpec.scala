@@ -40,6 +40,19 @@ class ExactSubstrGcSpec extends SparkSpec {
     assert(out(2L)._1 == false)
   }
 
+  test("exact_substr: spans longer than 255 words drop a 320-word duplicate") {
+    val dup = words(320, 50).mkString(" ")
+    val df = Seq((1L, dup), (2L, dup), (3L, words(320, 51).mkString(" ")))
+      .toDF("doc_id", "text")
+    for (cfg <- Seq(ExactSubstrConfig(spanWords = 300),
+                    ExactSubstrConfig(spanWords = 300, shortSpanWords = Some(280)))) {
+      val out = ExactSubstrDedup(df, "doc_id", "text", cfg).collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          ((r.getAs[Boolean]("exact_substr_keep"), r.getAs[Int]("n_removed_words")))).toMap
+      assert(out == Map(1L -> ((true, 0)), 2L -> ((false, 320)), 3L -> ((true, 0))), s"$cfg")
+    }
+  }
+
   test("exact_substr: short docs (< spanWords) have no spans; < minDocWords drops") {
     val df = Seq((1L, words(20, 20).mkString(" ")), (2L, words(55, 21).mkString(" ")))
       .toDF("doc_id", "text")
@@ -116,10 +129,10 @@ class ExactSubstrGcSpec extends SparkSpec {
     }
   }
 
-  test("hotKeyGroupByMin escape hatch agrees with the window-min default") {
+  test("forced groupBy-min (hotKeyThreshold = 0) agrees with the window-min default") {
     // mixed corpus: a mass-duplicated boilerplate block (the hot-key case
-    // the flag exists for), partial overlaps, and unique docs — in both
-    // single-length and multi-length (shortSpanWords) modes
+    // the groupBy-min shape exists for), partial overlaps, and unique docs
+    // — in both single-length and multi-length (shortSpanWords) modes
     val block = words(50, 60).mkString(" ")
     val shared = words(50, 61)
     val docs = ((0 until 300).map(i =>
@@ -130,11 +143,15 @@ class ExactSubstrGcSpec extends SparkSpec {
     def run(variant: ExactSubstrConfig) = ExactSubstrDedup(docs, "doc_id", "text", variant)
       .select("doc_id", "exact_substr_keep", "n_removed_words", "text")
       .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getInt(2), r.getString(3)))).toMap
-    // the single-pass (no-prefilter) shape: a zero key budget
-    def singlePass[T](body: => T): T = {
-      spark.conf.set(DupCandidates.MaxBroadcastKeysConf, "0")
-      try body finally spark.conf.unset(DupCandidates.MaxBroadcastKeysConf)
+    def withConf[T](key: String, value: String)(body: => T): T = {
+      spark.conf.set(key, value)
+      try body finally spark.conf.unset(key)
     }
+    // the single-pass (no-prefilter) shape: a zero key budget
+    def singlePass[T](body: => T): T = withConf(DupCandidates.MaxBroadcastKeysConf, "0")(body)
+    // every duplicated span exceeds a zero threshold: groupBy-min + join-back
+    def groupByMin[T](body: => T): T =
+      withConf("spark.graft.exactsubstr.hotKeyThreshold", "0")(body)
     for (cfg <- Seq(
         ExactSubstrConfig(),
         ExactSubstrConfig(shortSpanWords = Some(15)),
@@ -145,9 +162,9 @@ class ExactSubstrGcSpec extends SparkSpec {
         // the full span UDF (ADVICE r6)
         ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8)))) {
       val base = run(cfg)
-      assert(base == run(cfg.copy(hotKeyGroupByMin = true)), s"groupBy-min diverges for $cfg")
+      assert(base == groupByMin(run(cfg)), s"groupBy-min diverges for $cfg")
       assert(base == singlePass(run(cfg)), s"single pass diverges for $cfg")
-      assert(base == singlePass(run(cfg.copy(hotKeyGroupByMin = true))),
+      assert(base == singlePass(groupByMin(run(cfg))),
         s"single-pass groupBy-min diverges for $cfg")
     }
   }

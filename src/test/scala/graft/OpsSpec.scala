@@ -173,6 +173,46 @@ class OpsSpec extends SparkSpec {
     assert(out("u2") == (("", false)))
   }
 
+  test("Checkpoint.readMetrics: absent -> None without a reader warning, torn -> None, written -> Some") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_metrics").toString
+    val ckpt = new Checkpoint(dir)
+    // Spark's reader warns with a FileNotFoundException stack on a missing path
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("readMetricsWarnings", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    spark.sparkContext.setLogLevel("WARN")
+    try assert(ckpt.readMetrics("absent").isEmpty)
+    finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warnings.isEmpty, s"reading absent metrics logged: $warnings")
+
+    val metrics = Seq(("s1", 0, "", 2L)).toDF("stage", "partition_id", "drop_reason", "count")
+    ckpt.writeMetrics("torn", metrics)
+    val parts = new java.io.File(ckpt.metricsPath("torn")).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      val ch = java.nio.channels.FileChannel.open(f.toPath, java.nio.file.StandardOpenOption.WRITE)
+      try ch.truncate(f.length / 2) finally ch.close()
+    }
+    assert(ckpt.readMetrics("torn").isEmpty)
+
+    ckpt.writeMetrics("written", metrics)
+    assert(ckpt.readMetrics("written").map(_.count()).contains(1L))
+  }
+
   test("Checkpoint: committed stage is not recomputed") {
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
     val ckpt = new Checkpoint(dir)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.plans.Checkpoint
@@ -39,9 +40,8 @@ class ScalePostureSpec extends SparkSpec {
     assert(uncentered.getMessage.contains("Center"))
   }
 
-  test("postureDedupChain composes the dedup family over committed snapshots") {
-    val out = java.nio.file.Files.createTempDirectory("posture_spec").toString
-    val ckpt = new Checkpoint(out)
+  /** The planted chain corpus: (rows, recrawl urls). */
+  private def plantedCorpus(): (DataFrame, Seq[String]) = {
     // 300 synthetic pages give the generator's planted exact twins and
     // near-dup paraphrases; its urls are unique per row, so URL RECRAWLS
     // are planted here: 5 older captures of existing urls with drifted
@@ -69,6 +69,13 @@ class ScalePostureSpec extends SparkSpec {
     // drop them (review-caught, round 7 second pass)
     val identicalCopies = uniqueTextRows.orderBy(col("url").desc).limit(3)
     val kept = base.unionByName(recrawls).unionByName(identicalCopies)
+    (kept, recrawlUrls)
+  }
+
+  test("postureDedupChain composes the dedup family over committed snapshots") {
+    val out = java.nio.file.Files.createTempDirectory("posture_spec").toString
+    val ckpt = new Checkpoint(out)
+    val (kept, recrawlUrls) = plantedCorpus()
     val finalKept = RunPipeline.postureDedupChain(kept, ckpt)
 
     // no byte-identical capture survives anywhere in the chain
@@ -119,5 +126,28 @@ class ScalePostureSpec extends SparkSpec {
     val rerun = RunPipeline.postureDedupChain(kept, ckpt)
     assert(rerun.count() == finalKept.count())
     assert(rerun.select("doc_id").except(finalKept.select("doc_id")).isEmpty)
+  }
+
+  test("postureDedupChain: every stage keeps the same rows at 2 and 16 shuffle partitions") {
+    val (kept, _) = plantedCorpus()
+    val stages = Seq("stage_exact_dedup", "stage_url_dedup", "stage_minhash_dedup",
+      "stage_sentence_dedup", "stage_exact_substr")
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    def chainAt(partitions: Int): Checkpoint = {
+      val ckpt = new Checkpoint(
+        java.nio.file.Files.createTempDirectory(s"posture_p$partitions").toString)
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try RunPipeline.postureDedupChain(kept, ckpt).count()
+      finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+      ckpt
+    }
+    val (two, sixteen) = (chainAt(2), chainAt(16))
+    for (s <- stages) {
+      def rows(c: Checkpoint) = spark.read.parquet(c.stagePath(s))
+        .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val (a, b) = (rows(two), rows(sixteen))
+      assert(a == b, s"$s differs: ${(a diff b).size} rows only at 2 partitions, " +
+        s"${(b diff a).size} only at 16")
+    }
   }
 }
