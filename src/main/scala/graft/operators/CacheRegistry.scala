@@ -40,6 +40,10 @@ object CacheRegistry {
   def swapRotating(prefix: String, df: DataFrame, keep: Int = 4): DataFrame = {
     val dq = rotating.computeIfAbsent(prefix, _ => new java.util.ArrayDeque[DataFrame]())
     dq.synchronized {
+      // Spark's CacheManager keys a cache on its plan: a dataset whose plan
+      // is already in the window reads that entry's cache, so it replaces
+      // the entry, whose eviction would otherwise unpersist a live cache
+      dq.removeIf(old => old.sameSemantics(df))
       dq.addLast(df)
       while (dq.size > keep) {
         val old = dq.removeFirst()

@@ -55,7 +55,8 @@ final class UrlFilter(
     if (blockListedDomains.contains(registeredDomain)) return Some("domain")
     if (blockListedDomains.contains(fqdn)) return Some("subdomain")
     if (blockListedUrls.contains(url)) return Some("url")
-    val urlWords: Set[String] = Normalizer.split(url, -1).toSet
+    // built only when a word list reads it
+    lazy val urlWords: Set[String] = Normalizer.split(url, -1).toSet
     if (bannedWords.exists(urlWords.contains)) return Some("hard_blacklisted")
     if (softBannedWords.count(urlWords.contains) >= softWordThreshold)
       return Some("soft_blacklisted")
@@ -134,9 +135,11 @@ final class BadWordsFilter(
 
   // substring-mode languages (ja/th/zh, c4_filters.py:259-263) use an
   // Aho-Corasick pass instead of a giant regex alternation; word-boundary
-  // languages keep the reference's \W-flanked regex semantics
+  // languages keep the reference's \W-flanked regex semantics, run only
+  // on text that holds one of the words as a substring (`mayMatch`), which
+  // every regex match implies
   private sealed trait Matcher
-  private case class RegexMatcher(p: Pattern) extends Matcher
+  private case class RegexMatcher(p: Pattern, mayMatch: String => Boolean) extends Matcher
   private case class SubstringMatcher(ac: graft.functions.AhoCorasick) extends Matcher
   private case object NoMatcher extends Matcher
 
@@ -156,8 +159,16 @@ final class BadWordsFilter(
           SubstringMatcher(graft.functions.AhoCorasick(words))
         case Some(words) =>
           val joined = words.map(Pattern.quote).mkString("|")
+          // an empty word occurs everywhere; a short list is cheapest as
+          // one indexOf per word, a long one as one Aho-Corasick pass
+          val mayMatch: String => Boolean =
+            if (words.exists(_.isEmpty)) _ => true
+            else if (words.length <= BadWordsFilter.IndexOfWords) {
+              val ws = words.toArray
+              t => ws.exists(t.contains)
+            } else graft.functions.AhoCorasick(words).containsAny
           RegexMatcher(Pattern.compile(s"(?:\\W|^)($joined)(?:\\W|$$)",
-            Pattern.UNICODE_CHARACTER_CLASS))
+            Pattern.UNICODE_CHARACTER_CLASS), mayMatch)
       }
     })
 
@@ -166,13 +177,20 @@ final class BadWordsFilter(
     val lang = language.getOrElse(defaultLanguage)
     val found = matcherFor(lang) match {
       case NoMatcher => false
-      case RegexMatcher(re) => re.matcher(PyText.pyLower(text)).find()
+      case RegexMatcher(re, mayMatch) =>
+        val lower = PyText.pyLower(text)
+        mayMatch(lower) && re.matcher(lower).find()
       case SubstringMatcher(ac) => ac.containsAny(PyText.pyLower(text))
     }
     if (!found) None
     else if (keepFraction > 0.0 && rng.nextDouble() < keepFraction) None
     else Some("document_removed_with_badwords")
   }
+}
+
+object BadWordsFilter {
+  /** Longest word list whose substring prefilter runs one indexOf per word. */
+  private val IndexOfWords = 16
 }
 
 /** filters/regex_filter.py:8-29 — drop when the pattern matches. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -22,6 +23,15 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    deterministically into salts (the skew split of Hyper Dimension
   *    Shuffle): its data rows go to salt hash(id) mod s, its query rows to
   *    every salt. Salting never changes the output.
+  *
+  * Both block paths read one persisted base ([[vectorBase]]: Long id,
+  * float vector, norm) and learn what the block shuffle needs from a
+  * single pre-pass. lshTopK's [[prePass]] is one job with no exchange
+  * that fills the cache and returns the row count and the first row's
+  * vector size; ivfTopK's k-means sample plays that part when it is
+  * shorter than `sampleSize`. The base does not depend on a method's
+  * parameters, so lshTopK and ivfTopK on one input persist the same plan
+  * and the second call reads the first call's cache.
   */
 object Similarity {
 
@@ -106,14 +116,14 @@ object Similarity {
     * when known, is the sorted set of blocks holding at least two rows. */
   private final case class BlockStats(salts: Map[Long, Int], shared: Option[Array[Long]])
 
-  /** The first action counts `base` (filling its cache): no block outgrows
-    * the whole input, so an input of at most `bound` rows skips the
-    * per-block aggregate and leaves `shared` unknown. Otherwise one
-    * aggregate collects the shared blocks with their counts; when more than
-    * [[MaxSharedBlocks]] blocks are shared it collects only the hot ones
-    * and `shared` stays unknown. */
-  private def blockStats(base: DataFrame, blockKey: Column, bound: Int): BlockStats =
-    if (base.count() <= bound) BlockStats(Map.empty, None)
+  /** `rows` is the row count of `base`, which the caller's pre-pass
+    * learned (no count job runs here): no block outgrows the whole input,
+    * so an input of at most `bound` rows skips the per-block aggregate and
+    * leaves `shared` unknown. Otherwise one aggregate collects the shared
+    * blocks with their counts; when more than [[MaxSharedBlocks]] blocks
+    * are shared it collects only the hot ones and `shared` stays unknown. */
+  private def blockStats(base: DataFrame, blockKey: Column, bound: Int, rows: Long): BlockStats =
+    if (rows <= bound) BlockStats(Map.empty, None)
     else {
       import base.sparkSession.implicits._
       val counts = base.select(blockKey.as("__block")).groupBy("__block").count()
@@ -126,6 +136,39 @@ object Similarity {
         BlockStats(saltsOf(shared), Some(shared.map(_._1).sorted))
       else BlockStats(saltsOf(counts.where(col("count") > bound).as[(Long, Long)].collect()), None)
     }
+
+  /** The persisted (__id, __v, __n) projection both block paths read:
+    * Long ids, float vectors and their norms, so the input lineage and the
+    * norm fold run once. Its plan depends only on the input and the two
+    * columns, so a second top-k over the same input finds it cached (and
+    * does not persist it again). Rotating key: a caller may build a
+    * second top-k (e.g. cosineNearDupes after ann_lsh_topk) before this
+    * one's consumers have executed. */
+  private def vectorBase(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val base = df.select(col(idCol).cast("long").as("__id"),
+      col(vecCol).cast("array<float>").as("__v"), normCol(col(vecCol)).as("__n"))
+    if (base.storageLevel == StorageLevel.NONE) base.persist(StorageLevel.MEMORY_AND_DISK)
+    CacheRegistry.swapRotating("similarity.base", base)
+  }
+
+  /** The single pre-pass over a [[vectorBase]]: one job with no exchange
+    * fills its cache and returns (row count, vector size of the first row),
+    * the size -1 when that vector is null or there is no row. (A SQL
+    * count() over an unfilled cache runs three jobs under AQE.) */
+  private def prePass(base: DataFrame): (Long, Int) = {
+    val v = base.schema.fieldIndex("__v")
+    val parts = base.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      var first = -1
+      while (it.hasNext) {
+        val r = it.next()
+        if (n == 0 && !r.isNullAt(v)) first = r.getArray(v).numElements()
+        n += 1
+      }
+      Iterator.single((n, first))
+    }.collect()
+    (parts.iterator.map(_._1).sum, parts.find(_._1 > 0).fold(-1)(_._2))
+  }
 
   /** Candidate row `id` of `block` with `role`, spread over the block's
     * salts when it is hot: its data side goes to salt hash(id) mod s, its
@@ -257,17 +300,43 @@ object Similarity {
     * row lands in one bucket per band and is both a query and a data row
     * there, so the block core scores each bucket's members against each
     * other and merges a query's winners across bands, dropping a neighbor
-    * met in several bands. A bucket with one member scores nothing; on an
-    * input above the block bound the buckets are counted ([[blockStats]])
-    * and such a row never reaches the shuffle, and buckets above the bound
-    * are salted. `idCol` must be integral (byte, short, int or long): the
-    * core keys rows on Long ids, and any other type is refused before a
-    * job runs. Returns (idCol, neighbor, cosine, rank). */
+    * met in several bands. One pre-pass ([[prePass]]) over the shared base
+    * gives the row count and, from the first row, the hyperplanes'
+    * dimension; an empty input returns no rows. An input of at most the
+    * block bound is hashed on its way to the shuffle. Above the bound the
+    * hashed base is persisted, so the bucket counts ([[blockStats]]) and
+    * the block rows read one hash per row: a bucket with one member never
+    * reaches the shuffle, and buckets above the bound are salted. `idCol`
+    * must be integral (byte, short, int or long): the core keys rows on
+    * Long ids, and any other type is refused before a job runs. Returns
+    * (idCol, neighbor, cosine, rank). */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
               bands: Int = 8, bitsPerBand: Int = 8, seed: Long = 42L)
              (implicit spark: SparkSession): DataFrame = {
     val idType = integralId(df, idCol)
     blockTopK(lshRows(df, idCol, vecCol, bands, bitsPerBand, seed), k, dedupe = true, idCol, idType)
+  }
+
+  /** The band bucket keys of `vec`: per band, its `bitsPerBand` hyperplane
+    * signs as the low bits and the band index above them. */
+  private def bandBuckets(vec: Array[Float], planes: Array[Array[Double]], bands: Int,
+                          bitsPerBand: Int): Array[Long] = {
+    val bits = new Array[Boolean](planes.length)
+    var i = 0
+    while (i < planes.length) {
+      var dot = 0.0
+      val plane = planes(i)
+      var j = 0
+      while (j < plane.length && j < vec.length) { dot += plane(j) * vec(j); j += 1 }
+      bits(i) = dot >= 0
+      i += 1
+    }
+    Array.tabulate(bands) { b =>
+      var key = 0L
+      var j = 0
+      while (j < bitsPerBand) { key = (key << 1) | (if (bits(b * bitsPerBand + j)) 1L else 0L); j += 1 }
+      (b.toLong << 32) | key
+    }
   }
 
   /** lshTopK's block rows: a Both row per (row, band bucket), spread over
@@ -276,44 +345,24 @@ object Similarity {
                              bitsPerBand: Int, seed: Long)
                             (implicit spark: SparkSession): Dataset[BlockRow] = {
     import spark.implicits._
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
+    val base = vectorBase(df, idCol, vecCol)
+    val (rows, dim) = prePass(base)
+    if (rows == 0) return spark.emptyDataset[BlockRow]
+    require(dim >= 0, s"$vecCol of the first row is null: the LSH hyperplanes have no dimension")
     val planes = spark.sparkContext.broadcast(hyperplanes(dim, bands * bitsPerBand, seed))
     val nb = bands
     val bpb = bitsPerBand
-
-    val bucketUdf = udf { vec: Array[Float] =>
-      val p = planes.value
-      val bits = new Array[Boolean](p.length)
-      var i = 0
-      while (i < p.length) {
-        var dot = 0.0
-        val plane = p(i)
-        var j = 0
-        while (j < plane.length && j < vec.length) { dot += plane(j) * vec(j); j += 1 }
-        bits(i) = dot >= 0
-        i += 1
-      }
-      (0 until nb).map { b =>
-        var key = 0L
-        var j = 0
-        while (j < bpb) { key = (key << 1) | (if (bits(b * bpb + j)) 1L else 0L); j += 1 }
-        (b.toLong << 32) | key
-      }.toArray
-    }
-
-    // base is read twice (bucket stats, block rows): persist the
-    // (id, vec, norm, buckets) projection so the input lineage, the norm
-    // fold and the hashing run once. Rotating key — a caller may build a
-    // second lshTopK (e.g. cosineNearDupes after ann_lsh_topk) before this
-    // one's consumers have executed.
-    val base = CacheRegistry.swapRotating("similarity.lshBase", df
-      .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<float>").as("__v"),
-        normCol(col(vecCol)).as("__n"), bucketUdf(col(vecCol).cast("array<float>")).as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val stats = blockStats(base, explode(col("__b")), blockRows(dim))
+    val bound = blockRows(dim)
+    val bucketUdf = udf((v: Array[Float]) => bandBuckets(v, planes.value, nb, bpb))
+    val hashed = base.withColumn("__b", bucketUdf(col("__v")))
+    // above the bound the bucket stats and the block rows both read the
+    // buckets: persist them, so that no row is hashed twice
+    if (rows > bound)
+      CacheRegistry.swapRotating("similarity.lshHashed", hashed.persist(StorageLevel.MEMORY_AND_DISK))
+    val stats = blockStats(hashed, explode(col("__b")), bound, rows)
     val hot = stats.salts
     val shared = stats.shared.map(spark.sparkContext.broadcast(_))
-    base.as[(Long, Array[Float], Double, Array[Long])].flatMap { case (id, v, n, buckets) =>
+    hashed.as[(Long, Array[Float], Double, Array[Long])].flatMap { case (id, v, n, buckets) =>
       buckets.iterator
         .filter(b => shared.forall(s => java.util.Arrays.binarySearch(s.value, b) >= 0))
         .flatMap(b => salted(b, Both, id, v, n, hot))
@@ -348,20 +397,26 @@ object Similarity {
     * coarse quantizer for ivfTopK. Seeding: evenly spaced sample points
     * (deterministic, no RNG state dependence); empty cells keep their
     * previous centroid. Sample bias only affects cell BALANCE, never
-    * correctness (every vector is searched within its assigned cells). */
+    * correctness (every vector is searched within its assigned cells).
+    * Each iteration's assignment step runs on every driver core; the sums
+    * stay sequential in sample order, so the centroids are bit-identical
+    * to a single-threaded pass. */
   private[graft] def trainCentroids(sample: Array[Array[Float]], nLists: Int,
                                         iters: Int): Array[Array[Float]] = {
     val n = sample.length
     val kk = math.min(nLists, math.max(1, n))
     val dim = if (n == 0) 1 else sample(0).length
     val cents = Array.tabulate(kk)(i => sample((i.toLong * n / kk).toInt).clone())
+    val assigned = new Array[Int](n)
     var it = 0
     while (it < iters) {
+      java.util.stream.IntStream.range(0, n).parallel()
+        .forEach(i => assigned(i) = nearestCentroid(sample(i), cents))
       val sums = Array.fill(kk)(new Array[Double](dim))
       val counts = new Array[Long](kk)
       var i = 0
       while (i < n) {
-        val c = nearestCentroid(sample(i), cents)
+        val c = assigned(i)
         var d = 0
         while (d < dim) { sums(c)(d) += sample(i)(d); d += 1 }
         counts(c) += 1
@@ -413,26 +468,25 @@ object Similarity {
     * vectors into `nLists` cells; each query probes its `nProbe` nearest
     * cells and computes exact cosine only there. The scale path when LSH's
     * hyperplane bucketing fits poorly (clustered embeddings). Centroids
-    * train driver-side on a bounded deterministic sample and broadcast.
-    * In the block core a cell is a block: every vector is a data row of
-    * its nearest cell and a query row of each probed cell (one Both row
-    * where the two coincide). Cells above the block bound are salted
-    * ([[blockStats]]: a count of the persisted base and, only when the
-    * input exceeds the bound, one aggregate over the cells). `idCol` must
-    * be integral (byte, short, int or long): the core keys rows on Long
-    * ids, and any other type is refused before a job runs. Returns
-    * (idCol, neighbor, cosine, rank). */
+    * train driver-side on a bounded deterministic sample of the shared base
+    * and broadcast. In the block core a cell is a block: every vector is a
+    * data row of its nearest cell and a query row of each probed cell (one
+    * Both row where the two coincide). Cells above the block bound are
+    * salted ([[blockStats]], one aggregate over the cells, and only when
+    * the input exceeds the bound). The row count comes from the sample
+    * when it is shorter than `sampleSize` (it then holds every row), and
+    * from the [[prePass]] otherwise. An empty input returns no rows.
+    * `idCol` must be integral (byte, short, int or long): the core keys
+    * rows on Long ids, and any other type is refused before a job runs.
+    * Returns (idCol, neighbor, cosine, rank). */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
               nLists: Int = 64, nProbe: Int = 8, kmeansIters: Int = 5,
               sampleSize: Int = 8192)
              (implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
     val idType = integralId(df, idCol)
-    ivfRows(df, idCol, vecCol, nLists, nProbe, kmeansIters, sampleSize) match {
-      case Some(rows) => blockTopK(rows, k, dedupe = false, idCol, idType)
-      // Empty shards are a legitimate pipeline state: an empty result
-      case None => df.select(col(idCol), col(idCol).as("neighbor"),
-        lit(0.0).as("cosine"), lit(0).as("rank")).limit(0)
-    }
+    val rows = ivfRows(df, idCol, vecCol, nLists, nProbe, kmeansIters, sampleSize)
+    blockTopK(rows.getOrElse(spark.emptyDataset[BlockRow]), k, dedupe = false, idCol, idType)
   }
 
   /** ivfTopK's block rows, or None when the k-means sample is empty:
@@ -441,26 +495,20 @@ object Similarity {
                              nProbe: Int, kmeansIters: Int, sampleSize: Int)
                             (implicit spark: SparkSession): Option[Dataset[BlockRow]] = {
     import spark.implicits._
-    // base is read three times (sample, cell count, block rows), each
-    // re-running the input lineage and the norm fold: persist it (r8)
-    val base = CacheRegistry.swapRotating("similarity.ivfBase", df
-      .select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<float>").as("__v"), normCol(col(vecCol)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // the k-means sample reads the persisted base (same projection, same
-    // scan order ⇒ identical sample rows) instead of re-running the input
-    // lineage in a separate job — the input is scanned once, not twice,
-    // and the sample's partitions pre-fill the cache (r8 session 2)
+    val base = vectorBase(df, idCol, vecCol)
+    // the first sampleSize rows of the base in scan order; reading them
+    // also pre-fills its cache
     val sample: Array[Array[Float]] = base
       .select(col("__v")).limit(sampleSize)
       .as[Array[Float]].collect()
     // trainCentroids would index into an empty sample
     if (sample.isEmpty) return None
+    val rows = if (sample.length < sampleSize) sample.length.toLong else prePass(base)._1
     val cents = spark.sparkContext.broadcast(trainCentroids(sample, nLists, kmeansIters))
     val np = nProbe
 
     val cellUdf = udf { v: Array[Float] => nearestCentroid(v, cents.value).toLong }
-    val hot = blockStats(base, cellUdf(col("__v")), blockRows(sample(0).length)).salts
+    val hot = blockStats(base, cellUdf(col("__v")), blockRows(sample(0).length), rows).salts
     Some(base.as[(Long, Array[Float], Double)].flatMap { case (id, v, n) =>
       val own = nearestCentroid(v, cents.value)
       val probes = nearestCells(v, cents.value, np)

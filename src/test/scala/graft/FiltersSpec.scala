@@ -131,6 +131,18 @@ class FiltersSpec extends AnyFunSuite {
     assert(uf.check("https://blocke.dcom/some-sub-url?with=stuff").isEmpty)
   }
 
+  test("url filter: hard and soft word drops fire; a domains-only filter keeps worded urls") {
+    val uf = new UrlFilter(bannedWords = Set("casino"), softBannedWords = Set("free", "bonus", "win"))
+    assert(uf.check("https://example.com/casino-night") == Some("hard_blacklisted"))
+    assert(uf.check("https://example.com/free-bonus?x=1") == Some("soft_blacklisted"))
+    assert(uf.check("https://example.com/free-stuff").isEmpty)
+    assert(new UrlFilter(softBannedWords = Set("free", "bonus")).check("https://free.com/bonus") ==
+      Some("soft_blacklisted"))
+    assert(new UrlFilter(blockListedDomains = Set("blocked.com")).check("https://ok.com/casino-free-bonus").isEmpty)
+    // no word lists and a threshold of 0: zero soft words still reach it
+    assert(new UrlFilter(softWordThreshold = 0).check("https://ok.com/") == Some("soft_blacklisted"))
+  }
+
   // --- C4QualityFilter (semantics from c4_filters.py:88-136) ---
   test("c4 quality: lorem ipsum drops whole doc") {
     val text = "This is a fine sentence with words.\nSome Lorem Ipsum filler is here okay."
@@ -243,6 +255,34 @@ class FiltersSpec extends AnyFunSuite {
     assert(bw.check("this contains badwordish stuff.", Some("en")).isEmpty) // substring only
     assert(bw.check("这个文本有坏字", Some("zh")) == Some("document_removed_with_badwords"))
     assert(bw.check("clean text", Some("en")).isEmpty)
+  }
+
+  test("badwords: the substring prefilter never changes the regex verdict (short and long lists)") {
+    val rng = new scala.util.Random(5)
+    val alphabet = "abcdeéßøz"
+    val long = ("badwordalpha" +: "ss" +: "zoë" +:
+      Seq.fill(400)(Seq.fill(2 + rng.nextInt(6))(alphabet(rng.nextInt(alphabet.length))).mkString)).distinct
+    // near-misses, upper case, non-ASCII letters and supplementary-plane
+    // characters (a letter and a symbol) beside the words
+    val pieces = Seq("badwordalpha", "xbadwordalpha", "badwordalpha_", "BADWORDALPHA", "BadWordAlpha",
+      "ss", "ß", "STRASSE", "zoë", "ZOË", "zoëx", "é", "İ", "𐐀", "𝐀", "😀",
+      "_", "-", ".", " ", "\n", "'", "7", "q")
+    for (words <- Seq(Seq("badwordalpha", "ss", "zoë"), long, Seq("", "badwordalpha"))) {
+      val regex = java.util.regex.Pattern.compile(
+        s"(?:\\W|^)(${words.map(java.util.regex.Pattern.quote).mkString("|")})(?:\\W|$$)",
+        java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
+      val bw = new BadWordsFilter(Map("en" -> words))
+      var hits = 0
+      for (_ <- 0 until 4000) {
+        val text = Seq.fill(rng.nextInt(10)) {
+          if (rng.nextInt(4) == 0) words(rng.nextInt(words.length)) else pieces(rng.nextInt(pieces.length))
+        }.mkString
+        val want = regex.matcher(graft.text.PyText.pyLower(text)).find()
+        if (want) hits += 1
+        assert(bw.check(text, Some("en")).isDefined == want, s"${words.length} words: '$text'")
+      }
+      assert(hits > 200 && hits < 3800, s"${words.length} words: $hits of 4000 texts match")
+    }
   }
 
   // --- PII golden fixtures live in PiiSpec ---
