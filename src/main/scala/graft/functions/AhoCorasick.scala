@@ -12,11 +12,24 @@ final class AhoCorasick private (
     fail: Array[Int],
     hit: Array[Boolean]) extends Serializable {
 
+  /** The chars some pattern starts with, one bit per UTF-16 char. */
+  private val starts: Array[Long] = {
+    val bits = new Array[Long](1024)
+    next(0).keysIterator.foreach(c => bits(c.toInt >>> 6) |= 1L << c)
+    bits
+  }
+
   /** Does any pattern occur in `text`? */
   def containsAny(text: String): Boolean = {
     var state = 0
     var i = 0
-    while (i < text.length) {
+    val len = text.length
+    while (i < len) {
+      if (state == 0) {
+        // the root stays the root on a char no pattern starts with
+        while (i < len && (starts(text.charAt(i) >>> 6) & (1L << text.charAt(i))) == 0) i += 1
+        if (i == len) return false
+      }
       val c = text.charAt(i).toLong
       var s = state
       var n = next(s).getOrElse(c, -1)

@@ -56,6 +56,15 @@ object CacheRegistry {
     df
   }
 
+  /** Takes `df` out of the `prefix` window and unpersists it: for a cache
+    * whose rows a filled successor holds, so that only one copy stays. */
+  def release(prefix: String, df: DataFrame): Unit = {
+    val dq = rotating.get(prefix)
+    if (dq != null) dq.synchronized { dq.removeIf(old => old.sameSemantics(df)) }
+    try df.unpersist(blocking = false)
+    catch { case _: Exception => () }
+  }
+
   /** Unpersist every registered cache (both keyed and rotating). For
     * harnesses (Bench) that need a pristine-memory state between sections —
     * leftover persisted LSH projections / sampler partitions from earlier

@@ -159,14 +159,10 @@ final class BadWordsFilter(
           SubstringMatcher(graft.functions.AhoCorasick(words))
         case Some(words) =>
           val joined = words.map(Pattern.quote).mkString("|")
-          // an empty word occurs everywhere; a short list is cheapest as
-          // one indexOf per word, a long one as one Aho-Corasick pass
+          // an empty word occurs everywhere
           val mayMatch: String => Boolean =
             if (words.exists(_.isEmpty)) _ => true
-            else if (words.length <= BadWordsFilter.IndexOfWords) {
-              val ws = words.toArray
-              t => ws.exists(t.contains)
-            } else graft.functions.AhoCorasick(words).containsAny
+            else graft.functions.AhoCorasick(words).containsAny
           RegexMatcher(Pattern.compile(s"(?:\\W|^)($joined)(?:\\W|$$)",
             Pattern.UNICODE_CHARACTER_CLASS), mayMatch)
       }
@@ -186,11 +182,6 @@ final class BadWordsFilter(
     else if (keepFraction > 0.0 && rng.nextDouble() < keepFraction) None
     else Some("document_removed_with_badwords")
   }
-}
-
-object BadWordsFilter {
-  /** Longest word list whose substring prefilter runs one indexOf per word. */
-  private val IndexOfWords = 16
 }
 
 /** filters/regex_filter.py:8-29 — drop when the pattern matches. */

@@ -304,9 +304,11 @@ object Similarity {
     * gives the row count and, from the first row, the hyperplanes'
     * dimension; an empty input returns no rows. An input of at most the
     * block bound is hashed on its way to the shuffle. Above the bound the
-    * hashed base is persisted, so the bucket counts ([[blockStats]]) and
-    * the block rows read one hash per row: a bucket with one member never
-    * reaches the shuffle, and buckets above the bound are salted. `idCol`
+    * hashed base is persisted and, once the bucket counts ([[blockStats]])
+    * have filled it, replaces the base in the cache, so the counts and the
+    * block rows read one hash per row and one copy of the vectors stays
+    * cached: a bucket with one member never reaches the shuffle, and
+    * buckets above the bound are salted. `idCol`
     * must be integral (byte, short, int or long): the core keys rows on
     * Long ids, and any other type is refused before a job runs. Returns
     * (idCol, neighbor, cosine, rank). */
@@ -357,9 +359,14 @@ object Similarity {
     val hashed = base.withColumn("__b", bucketUdf(col("__v")))
     // above the bound the bucket stats and the block rows both read the
     // buckets: persist them, so that no row is hashed twice
-    if (rows > bound)
-      CacheRegistry.swapRotating("similarity.lshHashed", hashed.persist(StorageLevel.MEMORY_AND_DISK))
+    if (rows > bound) {
+      if (hashed.storageLevel == StorageLevel.NONE) hashed.persist(StorageLevel.MEMORY_AND_DISK)
+      CacheRegistry.swapRotating("similarity.lshHashed", hashed)
+    }
     val stats = blockStats(hashed, explode(col("__b")), bound, rows)
+    // the stats aggregate filled the hashed cache, which holds every base
+    // column: release the base, so that one copy of the vectors stays cached
+    if (rows > bound) CacheRegistry.release("similarity.base", base)
     val hot = stats.salts
     val shared = stats.shared.map(spark.sparkContext.broadcast(_))
     hashed.as[(Long, Array[Float], Double, Array[Long])].flatMap { case (id, v, n, buckets) =>
@@ -397,26 +404,20 @@ object Similarity {
     * coarse quantizer for ivfTopK. Seeding: evenly spaced sample points
     * (deterministic, no RNG state dependence); empty cells keep their
     * previous centroid. Sample bias only affects cell BALANCE, never
-    * correctness (every vector is searched within its assigned cells).
-    * Each iteration's assignment step runs on every driver core; the sums
-    * stay sequential in sample order, so the centroids are bit-identical
-    * to a single-threaded pass. */
+    * correctness (every vector is searched within its assigned cells). */
   private[graft] def trainCentroids(sample: Array[Array[Float]], nLists: Int,
                                         iters: Int): Array[Array[Float]] = {
     val n = sample.length
     val kk = math.min(nLists, math.max(1, n))
     val dim = if (n == 0) 1 else sample(0).length
     val cents = Array.tabulate(kk)(i => sample((i.toLong * n / kk).toInt).clone())
-    val assigned = new Array[Int](n)
     var it = 0
     while (it < iters) {
-      java.util.stream.IntStream.range(0, n).parallel()
-        .forEach(i => assigned(i) = nearestCentroid(sample(i), cents))
       val sums = Array.fill(kk)(new Array[Double](dim))
       val counts = new Array[Long](kk)
       var i = 0
       while (i < n) {
-        val c = assigned(i)
+        val c = nearestCentroid(sample(i), cents)
         var d = 0
         while (d < dim) { sums(c)(d) += sample(i)(d); d += 1 }
         counts(c) += 1

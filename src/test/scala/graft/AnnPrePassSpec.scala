@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 
 /** The ANN paths' single pre-pass: the jobs lshTopK and ivfTopK run before
-  * their block shuffle, the base they share, empty inputs, and the
-  * parallel k-means assignment. */
+  * their block shuffle, the base they share, the hashed cache above the
+  * bound, and empty inputs. */
 class AnnPrePassSpec extends SparkSpec {
 
   private def sc = spark.sparkContext
@@ -79,6 +79,26 @@ class AnnPrePassSpec extends SparkSpec {
     dropCaches()
   }
 
+  test("lshTopK above the bound: the filled hashed cache replaces the base and the row pass reads it") {
+    dropCaches()
+    val before = sc.getPersistentRDDs.keySet
+    val df = vectors(40)
+    def top() = Similarity.lshTopK(df, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4)
+    val want = top().collect().toSet
+    dropCaches()
+    Similarity.blockRowsOverride = 4
+    try {
+      val bounded = top()
+      val cached = sc.getPersistentRDDs.keySet -- before
+      assert(cached.size == 1, "the hashed projection only, no base beside it")
+      assert(bounded.collect().toSet == want)
+      assert(sc.getPersistentRDDs.keySet -- before == cached, "the hashed cache was not rebuilt")
+    } finally {
+      Similarity.blockRowsOverride = 0
+      dropCaches()
+    }
+  }
+
   test("empty input: lshTopK, ivfTopK and cosineNearDupes return no rows, with a non-empty call's schema") {
     val full = vectors(40)
     val empty = full.where(col("vec_id") < 0)
@@ -98,56 +118,5 @@ class AnnPrePassSpec extends SparkSpec {
     val df = vectors(4).withColumn("embedding",
       when(col("vec_id") === 0, lit(null).cast("array<float>")).otherwise(col("embedding")))
     intercept[IllegalArgumentException](Similarity.lshTopK(df, "vec_id", "embedding", 1))
-  }
-
-  /** The sequential Lloyd's reference: the nearest centroid by squared
-    * distance, the lower index on a tie, sums in sample order. */
-  private def sequentialCentroids(sample: Array[Array[Float]], nLists: Int,
-                                  iters: Int): Array[Array[Float]] = {
-    val n = sample.length
-    val kk = math.min(nLists, math.max(1, n))
-    val dim = sample(0).length
-    val cents = Array.tabulate(kk)(i => sample((i.toLong * n / kk).toInt).clone())
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(kk)(new Array[Double](dim))
-      val counts = new Array[Long](kk)
-      for (p <- sample) {
-        var best = 0
-        var bestD = Double.MaxValue
-        for (c <- 0 until kk) {
-          var d2 = 0.0
-          for (d <- 0 until dim) { val x = p(d) - cents(c)(d); d2 += x * x }
-          if (d2 < bestD) { bestD = d2; best = c }
-        }
-        for (d <- 0 until dim) sums(best)(d) += p(d)
-        counts(best) += 1
-      }
-      for (c <- 0 until kk if counts(c) > 0; d <- 0 until dim)
-        cents(c)(d) = (sums(c)(d) / counts(c)).toFloat
-    }
-    cents
-  }
-
-  test("trainCentroids: the parallel assignment is bit-identical to a sequential pass") {
-    // a point equidistant from two centroids joins the lower index
-    assert(Similarity.nearestCentroid(Array(0f), Array(Array(1f), Array(-1f))) == 0)
-    val rng = new scala.util.Random(17)
-    for (trial <- 0 until 24) {
-      val n = 1 + rng.nextInt(3000)
-      val dim = 1 + rng.nextInt(8)
-      // small integer grids make ties common; sprinkled ±2^60 coordinates
-      // make the double sums round (2^60 + 1 == 2^60), so the order of the
-      // sums shows in the centroids
-      val huge = math.pow(2, 60).toFloat
-      val sample = Array.fill(n, dim) {
-        if (trial % 2 == 1 && rng.nextInt(30) == 0) (if (rng.nextBoolean()) huge else -huge)
-        else (rng.nextInt(5) - 2).toFloat
-      }
-      val nLists = 1 + rng.nextInt(40)
-      val iters = rng.nextInt(6)
-      def bits(cs: Array[Array[Float]]) = cs.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
-      assert(bits(Similarity.trainCentroids(sample, nLists, iters)) ==
-        bits(sequentialCentroids(sample, nLists, iters)), s"trial $trial: n=$n dim=$dim k=$nLists")
-    }
   }
 }

@@ -73,6 +73,23 @@ class TextKernelsSpec extends AnyFunSuite {
     assert(!ac.containsAny(""))
   }
 
+  test("aho-corasick agrees with per-pattern contains on random texts") {
+    import graft.functions.AhoCorasick
+    // chars from several 64-char blocks, a surrogate pair among them, so
+    // the skip over chars no pattern starts with meets every block
+    val alphabet = "abcxyzAB é坏词𝐀".toCharArray
+    val rng = new scala.util.Random(5)
+    def str(max: Int) = new String(Array.fill(1 + rng.nextInt(max))(alphabet(rng.nextInt(alphabet.length))))
+    for (trial <- 0 until 200) {
+      val patterns = Seq.fill(1 + rng.nextInt(6))(str(3))
+      val ac = AhoCorasick(patterns)
+      for (_ <- 0 until 50) {
+        val text = if (rng.nextBoolean()) str(40) else ""
+        assert(ac.containsAny(text) == patterns.exists(text.contains), s"trial $trial: $patterns in '$text'")
+      }
+    }
+  }
+
   test("simplify_text configurable knobs: weekday/month norm, toggles, default-path equivalence") {
     import TextKernels.TextNormConfig
     // non-default knobs (reference WEEKDAYS/MONTHS patterns run on the
