@@ -171,7 +171,6 @@ object Measure {
     val rows = Bench.corpusRows(sfDir)
     Bench.pipelineDocsPerSec(spark, math.max(rows / 10, 1000)) // JIT warm-up
     CacheRegistry.clearAll()
-    spark.catalog.clearCache()
     System.gc()
     val probeStart = Bench.noiseProbe()
     val secs = (1 to reps).map { r =>
@@ -259,10 +258,10 @@ object Measure {
         s.count()
         s
       }
-      // checkpointed, not persisted: components() unpersists its input's
-      // cache entry, which would make the second path recompute the edges
-      val (edges, _) = phase("minhash_edges")(MinhashDedup.duplicateEdges(sigs).localCheckpoint())
-      val nEdges = edges.count()
+      val ((edges, nEdges), _) = phase("minhash_edges") {
+        val e = keep(MinhashDedup.duplicateEdges(sigs))
+        (e, e.count())
+      }
       val (dist, _) = phase("components_distributed") {
         val l = keep(MinhashDedup.components(edges, driverEdgeLimit = 0L))
         l.count()

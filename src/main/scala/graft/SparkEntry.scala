@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.WebCorpusGen
@@ -301,19 +301,19 @@ FROM documents ORDER BY doc_id"""
     * while distinct groups share no shingles (md5 diffusion; digits are
     * translated to letters so simplify_text's digit normalization cannot
     * alias two groups). */
-  /** Persist a constructed oracle input/intermediate that downstream
+  /** Cache a constructed oracle input/intermediate that downstream
     * operators consume in several passes (guard pass + main pass + final
     * join): the md5-block planted-text constructions are CPU-visible at
-    * 200k rows and would otherwise recompute per consumption (r8). Keyed
-    * through CacheRegistry so repeated bench attempts stay bounded. */
-  private def cachedConstruction(key: String, df: DataFrame): DataFrame =
-    CacheRegistry.swapRotating(key,
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    * 200k rows and would otherwise recompute per consumption (r8). A local
+    * checkpoint, so the query's own frames own it and Spark's
+    * ContextCleaner drops it once they are unreachable. */
+  private def cachedConstruction(df: DataFrame): DataFrame =
+    GraftSqlBridge.localCheckpoint(df)
 
   private def syntheticDupDocs(s: SparkSession, dir: String): DataFrame = {
     val h = translate(md5((col("doc_id") % 100).cast("string")),
       "0123456789", "ghijklmnop")
-    cachedConstruction("oracle.dupdocs." + dir, documents(s, dir).select(col("doc_id"),
+    cachedConstruction(documents(s, dir).select(col("doc_id"),
       concat_ws(" ", (0 until 8).map(i => substring(h, i * 4 + 1, 4)): _*).as("text")))
   }
 
@@ -331,12 +331,11 @@ FROM documents ORDER BY doc_id"""
     val twins = docs.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + lit(base)).as("doc_id"), col("text"))
     // the oracle's crossJoin consumes `out` three times (o twice, t once);
-    // persist the slim verdict projection so the parquet scan + comps join
+    // cache the slim verdict projection so the parquet scan + comps join
     // run once, not per aggregate branch (r8)
-    val out = CacheRegistry.swapRotating("oracle.minhash.twin",
+    val out = cachedConstruction(
       MinhashDedup.dedup(docs.unionByName(twins), "doc_id", "text")
-        .select(col("doc_id"), col("minhash_cluster"), col("minhash_keep"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), col("minhash_cluster"), col("minhash_keep")))
     val t = out.where(col("doc_id") >= base)
       .select((col("doc_id") - lit(base)).as("src_id"),
         col("minhash_cluster").as("t_cluster"), col("minhash_keep").as("t_keep"))
@@ -357,7 +356,7 @@ FROM documents ORDER BY doc_id"""
         "0123456789", "ghijklmnop")
       (0 until 8).map(i => substring(h, i * 4 + 1, 4))
     }
-    cachedConstruction("oracle.longdupdocs." + dir,
+    cachedConstruction(
       documents(s, dir).select(col("doc_id"), concat_ws(" ", words: _*).as("text")))
   }
 
@@ -696,7 +695,7 @@ FROM documents ORDER BY doc_id"""
           "0123456789", "ghijklmnop")
         concat_ws(" ", (0 until 8).map(i => substring(h, i * 4 + 1, 4)): _*)
       }
-      val sentDocs = cachedConstruction("oracle.sd.sent." + dir,
+      val sentDocs = cachedConstruction(
         documents(s, dir).select(col("doc_id"),
           concat(concat_ws(". ", blocks: _*), lit(".")).as("text")))
       SentenceDedup(sentDocs, "doc_id", "text",
@@ -724,7 +723,7 @@ FROM documents ORDER BY doc_id"""
           "0123456789", "ghijklmnop")
         (0 until 8).map(i => substring(h, i * 4 + 1, 4))
       }
-      val docs = cachedConstruction("oracle.es.short." + dir,
+      val docs = cachedConstruction(
         documents(s, dir).select(col("doc_id"), concat_ws(" ", words: _*).as("text")))
       val short = ExactSubstrDedup(docs, "doc_id", "text",
           ExactSubstrConfig(minDocWords = 10, shortSpanWords = Some(15)))
@@ -775,7 +774,7 @@ FROM documents ORDER BY doc_id"""
       val cfg = ExactSubstrConfig(spanWords = 16, minDocWords = 5,
         anchorEvery = Some(8))
       val longRes = ExactSubstrDedup(
-          cachedConstruction("oracle.es.anch.long." + dir,
+          cachedConstruction(
             documents(s, dir).select(col("doc_id"), longText.as("text"))),
           "doc_id", "text", cfg)
         .select(col("doc_id"), col("exact_substr_keep").as("keep_long"),
@@ -783,7 +782,7 @@ FROM documents ORDER BY doc_id"""
           (col("n_removed_words") >= 16 && col("n_removed_words") <= 24)
             .as("caught_long"))
       val bandRes = ExactSubstrDedup(
-          cachedConstruction("oracle.es.anch.band." + dir,
+          cachedConstruction(
             documents(s, dir).select(col("doc_id"), bandText.as("text"))),
           "doc_id", "text", cfg)
         .groupBy()
@@ -1239,18 +1238,17 @@ FROM documents ORDER BY doc_id"""
       val docs = documents(s, dir).select(col("doc_id"), col("text"))
       val d1 = docs.select((col("doc_id") - 1).as("doc_id"), col("text").as("t1"))
       val d2 = docs.select((col("doc_id") - 2).as("doc_id"), col("text").as("t2"))
-      val tri = cachedConstruction("oracle.sd.tri." + dir,
+      val tri = cachedConstruction(
         docs.join(d1, "doc_id").join(d2, "doc_id")
           .select(col("doc_id"), concat_ws("\n", col("text"), col("t1"), col("t2")).as("text")))
       val base = docs.agg(max("doc_id")).first().getLong(0) + 1L
       val twins = tri.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + lit(base)).as("doc_id"), col("text"))
-      // both aggregate branches consume `out`: persist the slim verdict so
+      // both aggregate branches consume `out`: cache the slim verdict so
       // the stitch joins + rewrite/wordCount/sentCount UDFs run once (r8)
-      val out = CacheRegistry.swapRotating("oracle.sentence.twin",
+      val out = cachedConstruction(
         SentenceDedup(tri.unionByName(twins), "doc_id", "text")
-          .select(col("doc_id"), col("sentence_dedup_keep"), col("removed_sentences"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("doc_id"), col("sentence_dedup_keep"), col("removed_sentences")))
       val t = out.where(col("doc_id") >= base)
       val o = out.where(col("doc_id") < base)
       o.agg(count(lit(1)).as("n_stitched"),
@@ -1269,12 +1267,11 @@ FROM documents ORDER BY doc_id"""
       val base = docs.agg(max("doc_id")).first().getLong(0) + 1L
       val twins = docs.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + lit(base)).as("doc_id"), col("text"))
-      // three consumptions of `out` (o twice, t once): persist the slim
+      // three consumptions of `out` (o twice, t once): cache the slim
       // verdict so the final per-row simhash UDF pass runs once (r8)
-      val out = CacheRegistry.swapRotating("oracle.simhash.twin",
+      val out = cachedConstruction(
         SimHashDedup(docs.unionByName(twins), "doc_id", "text", maxHamming = 3)
-          .select(col("doc_id"), col("simhash_cluster"), col("simhash_keep"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("doc_id"), col("simhash_cluster"), col("simhash_keep")))
       val t = out.where(col("doc_id") >= base)
         .select((col("doc_id") - lit(base)).as("src_id"),
           col("simhash_cluster").as("t_cluster"), col("simhash_keep").as("t_keep"))
@@ -1762,10 +1759,10 @@ FROM documents ORDER BY doc_id"""
     "hard_sampler_frac" -> ((s, dir) => {
       // hardTopP's full config surface (hard_sampler.py:10-47): top_p as a
       // doc-count fraction, a token-mass fraction, and lowest-first
-      // three hardTopP passes + the final join all consume `base` — persist
+      // three hardTopP passes + the final join all consume `base` — cache
       // the slim (id, score, tokens) projection so the word-count
       // expression runs once (r8)
-      val base = cachedConstruction("oracle.hardfrac." + dir, documents(s, dir)
+      val base = cachedConstruction(documents(s, dir)
         .select(col("doc_id"), col("doc_id").as("score"),
           tokenCountCol(col("text")).as("tokens")))
       val docKept = Sampling.hardTopP(base, "score", 0.25, "doc")
@@ -1813,9 +1810,9 @@ FROM documents ORDER BY doc_id"""
       // (group stride 100 is even), so in-index membership is SQL-derivable
       implicit val sp: SparkSession = s
       val docs = syntheticDupDocs(s, dir)
-      // strict AND loose probe the same index — persist it so the index
+      // strict AND loose probe the same index — cache it so the index
       // half's signature UDF runs once (r8)
-      val idx = cachedConstruction("oracle.minhash.idx." + dir,
+      val idx = cachedConstruction(
         MinhashDedup.buildIndex(docs.where(col("doc_id") % 2 === 0), "doc_id", "text"))
       val strict = MinhashDedup.dedupWithIndex(docs, "doc_id", "text", idx)
         .select(col("doc_id"), col("minhash_keep").as("keep_index_only"))
@@ -1873,9 +1870,9 @@ FROM documents ORDER BY doc_id"""
       val twins = docs.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + lit(base)).as("doc_id"), col("text"))
       // both aggregate branches consume `out`, and BloomDedup is a
-      // SEQUENTIAL single-task pass by construction — persist the slim
+      // SEQUENTIAL single-task pass by construction — cache the slim
       // verdict so the bloom scan runs once, not per branch (r8)
-      val out = cachedConstruction("oracle.bloom.twin", BloomDedup(
+      val out = cachedConstruction(BloomDedup(
           docs.unionByName(twins).coalesce(1).sortWithinPartitions("doc_id"),
           "doc_id", "text", BloomDedupConfig(nGrams = 5))
         .select(col("doc_id"), col("bloom_keep")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Hashes
@@ -213,15 +213,12 @@ object SentenceDedup {
                 onlyDedupInIndex: Boolean = true)
                (implicit spark: SparkSession): DataFrame = {
     // loose mode consumes the corpus window hashes THREE times (index
-    // probe, first-wins agg, join-back) — persist the slim sigs projection
+    // probe, first-wins agg, join-back) — cache the slim sigs projection
     // so the hashing UDF runs once, same pattern as SimHashDedup
     val sigs0 = sigsOf(df, idCol, textCol, cfg)
     val sigs =
       if (onlyDedupInIndex) sigs0
-      // (the actual .persist was missing here through r6 — swapRotating
-      // only does unpersist bookkeeping; review-caught)
-      else CacheRegistry.swapRotating("sentencededup.indexsigs",
-        sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else GraftSqlBridge.localCheckpoint(sigs0)
     val indexHashes = indexDf
       .where(col(indexTextCol).isNotNull) // null index rows: skip, not NPE
       .select(explode(windowHashesUdf(cfg)(col(indexTextCol))).as("w"))
@@ -381,14 +378,13 @@ object SimHashDedup {
     val bands = maxHamming + 1
     val bandBits = 64 / bands
     // the per-doc simhash UDF (simplify + tokenize + 64-bin charge/discharge)
-    // is the expensive narrow pass — compute it ONCE into a persisted slim
+    // is the expensive narrow pass — compute it ONCE into a cached slim
     // (id, simhash) projection for the candidate-generation flow, which
     // consumes it three times (reps groupBy, exact-edge probe, banding).
-    // Rotating key: building a second SimHashDedup before materializing the
-    // first must not evict the first's cache (deferred-consumer hazard).
-    val withSim = CacheRegistry.swapRotating("simhash.sim",
-      df.select(col(idCol), simhashUdf(col(textCol)).as("simhash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // A local checkpoint, owned by the frames that read it: a second
+    // SimHashDedup built before this one runs cannot evict it.
+    val withSim = GraftSqlBridge.localCheckpoint(
+      df.select(col(idCol), simhashUdf(col(textCol)).as("simhash")))
 
     // Identical fingerprints are distance-0 duplicates by definition:
     // collapse each simhash value to a min-id representative FIRST and emit
@@ -424,11 +420,11 @@ object SimHashDedup {
       .distinct()
 
     val comps = MinhashDedup.components(exactEdges.union(repEdges))
-    // annotate via a per-row withColumn (NOT a join on id): a join would
-    // change the row contract — null ids silently vanish from an inner
-    // equi-join and duplicate ids multiply output rows. One extra UDF pass
-    // here keeps per-row semantics; candidate generation above still reads
-    // the cached projection (2 total UDF passes vs 3 before the cache).
+    // annotate every input row: the simhash by a per-row withColumn, the
+    // cluster by a LEFT join on id. `comps` holds one row per clustered
+    // doc, so a null id keeps its row (null cluster → its own id) and a
+    // repeated id keeps each of its rows. The per-row UDF pass is the
+    // second one; candidate generation above reads the cached projection.
     df.withColumn("simhash", simhashUdf(col(textCol)))
       .join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
       .withColumn("simhash_cluster", coalesce(col("cluster"), col(idCol)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 
@@ -79,36 +79,37 @@ private[graft] object DupCandidates {
     * action (a count+max over the persisted key aggregate — key-only
     * shuffle, map-side combined) buys the decision the round-6 design left
     * to a manual flag: broadcast-semi below the key budget, single-pass
-    * fallback above it. The aggregate is persisted through CacheRegistry
-    * so the sizing action and the caller's semi/anti probes share one
-    * computation (this also closes the dupTh double-execution hazard —
-    * the lineage runs once, not per consumer).
+    * fallback above it. The aggregate is a local checkpoint, so the
+    * sizing action and the caller's semi/anti probes share one computation
+    * (this also closes the dupTh double-execution hazard — the lineage
+    * runs once, not per consumer), and the frames that read it own it:
+    * Spark's ContextCleaner drops it once they are unreachable.
     *
-    * The sizing persist is DISK_ONLY (review-caught, round 7): on a
+    * The checkpoint is DISK_ONLY (review-caught, round 7): on a
     * mass-dup corpus the aggregate can be arbitrarily large, and
     * materializing it into storage MEMORY just to read two numbers would
     * evict other cached data in exactly the regime the guard exists to
     * protect. Disk-only bounds the collateral to transient local-disk
-    * churn (comparable to the sizing pass's own shuffle files, removed on
-    * the over-budget unpersist) while keeping the common path single-pass
-    * — sizing ExactSubstr's expensive span-hash stream twice instead
-    * measured +25% phase time / +1.7 GB exchange at 2M. The under-budget
-    * consumers (two broadcast collects of an ≤[[maxBroadcastKeys]]-key
-    * set) read megabytes back from page-cached disk, which is noise.
+    * churn (comparable to the sizing pass's own shuffle files) while
+    * keeping the common path single-pass — sizing ExactSubstr's expensive
+    * span-hash stream twice instead measured +25% phase time / +1.7 GB
+    * exchange at 2M. The under-budget consumers (two broadcast collects of
+    * an ≤[[maxBroadcastKeys]]-key set) read megabytes back from
+    * page-cached disk, which is noise.
     *
-    * Every key column must be fixed width (see the key contract above); a
-    * string or other variable-width key is refused with an
-    * IllegalArgumentException before any job runs. */
-  def guardedDupKeys(df: DataFrame, keyCols: Seq[String], cacheKey: String): Guarded = {
+    * `label` names the caller in the log. Every key column must be fixed
+    * width (see the key contract above); a string or other variable-width
+    * key is refused with an IllegalArgumentException before any job
+    * runs. */
+  def guardedDupKeys(df: DataFrame, keyCols: Seq[String], label: String): Guarded = {
     keyCols.foreach { k =>
       val t = df.schema(k).dataType
       require(UnsafeRow.isFixedLength(t),
-        s"DupCandidates[$cacheKey]: key column $k is $t; guard keys must be fixed " +
+        s"DupCandidates[$label]: key column $k is $t; guard keys must be fixed " +
           "width (hash a variable-width value and confirm it on the candidates)")
     }
-    val dk = CacheRegistry.swapRotating(cacheKey,
-      dupKeysWithCounts(df, keyCols)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    val dk = GraftSqlBridge.localCheckpoint(dupKeysWithCounts(df, keyCols),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val stats = dk.agg(count(lit(1)).as("k"), max(col("__n")).as("m")).head()
     val nKeys = stats.getLong(0)
     val maxN = if (stats.isNullAt(1)) 0L else stats.getLong(1)
@@ -116,10 +117,9 @@ private[graft] object DupCandidates {
     if (budget > 0 && nKeys <= budget)
       Guarded(Some(dk.select(keyCols.map(col): _*)), nKeys, maxN)
     else {
-      log.warn(s"DupCandidates[$cacheKey]: $nKeys duplicated keys exceed the " +
+      log.warn(s"DupCandidates[$label]: $nKeys duplicated keys exceed the " +
         s"broadcast budget of $budget keys [$MaxBroadcastKeysConf] — falling back " +
         "to the single-pass shape (no broadcast, no prefilter)")
-      try dk.unpersist(blocking = false) catch { case _: Exception => () }
       Guarded(None, nKeys, maxN)
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashes
 import graft.text.{TextKernels, Tokenizer}
@@ -277,45 +277,47 @@ object MinhashDedup {
     * `spark.graft.uf.driverEdgeLimit` (default 5×10^6) — conf-settable so
     * harnesses and tests can route real corpora through the DISTRIBUTED
     * label-propagation path without touching call sites; the two paths are
-    * pinned label-identical in DedupSpec. */
+    * pinned label-identical in DedupSpec.
+    *
+    * The edge copy and each round's labels are local checkpoints, owned by
+    * the frames that read them: a caller's own cache of `edges0` is never
+    * touched, nothing is registered in the CacheManager, and Spark's
+    * ContextCleaner drops a round's labels once no later round reads
+    * them. */
   def components(edges0: DataFrame, maxIter: Int = 30,
                  driverEdgeLimit: Long = -1L): DataFrame = {
     val spark = edges0.sparkSession
     val limit =
       if (driverEdgeLimit >= 0) driverEdgeLimit
       else spark.conf.get("spark.graft.uf.driverEdgeLimit", "5000000").toLong
-    val edges = edges0.cache()
+    val edges = GraftSqlBridge.localCheckpoint(edges0)
     // limit 0 = the distributed path is forced: the sizing count would be
-    // pure overhead (and its limit(1) short-read materializes only part of
-    // the cache, re-running the heavy edge lineage in the next job) — skip
-    // straight to label propagation, which handles an empty edge set
-    // correctly anyway (empty labels, one convergence round) (r8)
+    // pure overhead — skip straight to label propagation, which handles an
+    // empty edge set correctly anyway (empty labels, one convergence
+    // round) (r8)
     val edgeCount =
       if (limit == 0) Long.MaxValue
       // (limit+1).toInt would overflow for a caller-raised limit near
       // Long.MaxValue — same guard shape as Similarity.bruteForceTopK
       else if (limit >= Int.MaxValue - 1) edges.count()
       else edges.limit(limit.toInt + 1).count()
-    if (edgeCount == 0) { // no duplicate pairs at all — skip the whole loop
-      edges.unpersist()
-      return edges0.select(col("doc"), col("rep").as("cluster"))
-    }
+    if (edgeCount == 0) // no duplicate pairs at all — skip the whole loop
+      return edges.select(col("doc"), col("rep").as("cluster"))
     if (edgeCount <= limit &&
         edges.schema("doc").dataType == org.apache.spark.sql.types.LongType) {
       import spark.implicits._
       val pairs = edges.select(col("doc").cast("long"), col("rep").cast("long"))
         .as[(Long, Long)].collect()
-      edges.unpersist()
       return driverComponents(pairs, spark)
     }
     // Fill the edge cache with ONE explicit action before the label lineage
     // consumes it: the initial-labels job reads `edges` through two union
     // branches, and concurrent tasks racing an unfilled cache each
     // recompute the heavy signature/window lineage per branch (measured
-    // 1.7 s vs 0.14 s cached at sf0.1). A forced path (limit 0) skipped
-    // the sizing count entirely and paid that race; a sized path's
-    // limit(k) short-read filled only part of the cache (r8).
-    edges.count()
+    // 1.7 s vs 0.14 s cached at sf0.1). A sized path's action already
+    // filled it (a local checkpoint fills the partitions a short read
+    // skipped); a forced path (limit 0) ran none.
+    if (limit == 0) edges.count()
     // `und` is two cheap projections of the now-cached edges — caching it
     // too would just double-buffer the same rows (r8; it was cached before)
     val und = edges.select(col("doc").as("u"), col("rep").as("v"))
@@ -329,10 +331,10 @@ object MinhashDedup {
     // init groupBy exchange (guide §2.3) and halves the cached-edge scans
     // feeding it (r8 session 3).
     val lsr = least(col("doc"), col("rep"))
-    var labels = edges.select(col("doc").as("doc"), lsr.as("cluster"))
-      .union(edges.select(col("rep").as("doc"), lsr.as("cluster")))
-      .groupBy("doc").agg(min("cluster").as("cluster"))
-      .cache()
+    var labels = GraftSqlBridge.localCheckpoint(
+      edges.select(col("doc").as("doc"), lsr.as("cluster"))
+        .union(edges.select(col("rep").as("doc"), lsr.as("cluster")))
+        .groupBy("doc").agg(min("cluster").as("cluster")))
     // Convergence via the label-sum invariant (r8): every step takes a MIN
     // over a set containing the row's own label, so per-row labels are
     // monotonically non-increasing — the exact (Decimal-38, overflow-free)
@@ -346,10 +348,6 @@ object MinhashDedup {
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
     var prevSum = labelSum(labels)
-    // parents of the not-yet-materialized `labels`, freed only after the
-    // next aggregate action has filled the current round's caches (freeing
-    // eagerly would force the fill to recompute the freed lineage)
-    var toFree: List[DataFrame] = Nil
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -362,14 +360,10 @@ object MinhashDedup {
       // round therefore skips the self-join entirely (r8 session 2).
       val viaEdges = und.join(labels, und("v") === labels("doc"))
         .select(und("u").as("doc"), col("cluster"))
-      val afterNeighbors = viaEdges.union(labels)
-        .groupBy("doc").agg(min("cluster").as("cluster"))
-        .cache()
+      val afterNeighbors = GraftSqlBridge.localCheckpoint(viaEdges.union(labels)
+        .groupBy("doc").agg(min("cluster").as("cluster")))
       val aSum = labelSum(afterNeighbors)
-      toFree.foreach(_.unpersist())
-      toFree = Nil
       if (aSum.compareTo(prevSum) == 0) {
-        labels.unpersist()
         labels = afterNeighbors
         converged = true
       } else {
@@ -378,23 +372,15 @@ object MinhashDedup {
         // pre-jump sum, which is exact: the jump is also monotone, so
         // sum(A_{r+1}) = sum(A_r) forces A_{r+1} = jump(A_r) = A_r
         // pointwise, which implies both fixpoint conditions at once.
-        val next = afterNeighbors.as("l")
+        val next = GraftSqlBridge.localCheckpoint(afterNeighbors.as("l")
           .join(afterNeighbors.as("r"), col("l.cluster") === col("r.doc"), "left")
           .select(col("l.doc").as("doc"),
-            least(col("l.cluster"), coalesce(col("r.cluster"), col("l.cluster"))).as("cluster"))
-          .cache()
-        labels.unpersist()
-        toFree = List(afterNeighbors)
+            least(col("l.cluster"), coalesce(col("r.cluster"), col("l.cluster"))).as("cluster")))
         labels = next
         prevSum = aSum
       }
       iter += 1
     }
-    // a maxIter exit leaves the final pointer-jump cache unfilled — fill it
-    // before its parents (afterNeighbors, edges) are released below
-    if (!converged) labels.count()
-    toFree.foreach(_.unpersist())
-    edges.unpersist()
     labels
   }
 
@@ -452,11 +438,11 @@ object MinhashDedup {
             s"'${configString(cfg)}' — signatures cannot match")
       }
     // loose mode consumes the signature UDF's output twice (index probe +
-    // clustering) — persist the slim projection so hashing runs once
+    // clustering) — cache the slim projection so hashing runs once
     val sigs0 = signatures(df, idCol, textCol, cfg)
     val sigs =
       if (onlyDedupInIndex) sigs0
-      else graft.operators.CacheRegistry.swapRotating("minhash.indexsigs", sigs0)
+      else GraftSqlBridge.localCheckpoint(sigs0)
     val inIndex = sigs
       .join(indexSigs.select("bucket", "sig").distinct(), Seq("bucket", "sig"), "left_semi")
       .select(col("doc")).distinct()

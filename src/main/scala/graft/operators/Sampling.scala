@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftSqlBridge, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Score-driven sampling ops (fork's cdf_gc/eta_dacp, SURVEY.md §2.11):
   * global sort by a quality score + running token-mass prefix sum.
@@ -30,21 +29,20 @@ object Sampling {
   /** Append an exact Long running sum of `tokenCol` in (scoreCol desc,
     * tokenCol asc) order as `__running` (the row's own tokens included),
     * keeping a `__tok` long-cast copy of the token column. Returns the
-    * annotated frame plus the grand total. Two passes over a persisted
-    * range-partitioned dataset (the persist pins the partition assignment
-    * so both passes agree). */
+    * annotated frame plus the grand total. Two passes over a cached
+    * range-partitioned dataset (the cache pins the partition assignment
+    * so both passes agree). The cache is a local checkpoint owned by the
+    * returned frame: a second sampler built before this one's deferred
+    * pass-2 action runs cannot evict it, and Spark's ContextCleaner drops
+    * it once the frame is unreachable. */
   private def withRunningSum(df0: DataFrame, scoreCol: String,
                              tokenCol: String): (DataFrame, Long, Long) = {
     val spark = df0.sparkSession
     val df = df0.withColumn("__tok", col(tokenCol).cast("long"))
     val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    // Rotating key: building sampler B must not evict sampler A's pinned
-    // range-partitioning before A's deferred pass-2 action runs (pass-2
-    // correctness depends on the persisted partition assignment).
-    val parted = CacheRegistry.swapRotating("sampling.runningSum", df
+    val parted = GraftSqlBridge.localCheckpoint(df
       .repartitionByRange(n, desc(scoreCol), asc(tokenCol))
-      .sortWithinPartitions(desc(scoreCol), asc(tokenCol))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .sortWithinPartitions(desc(scoreCol), asc(tokenCol)))
     val tokIdx = parted.schema.fieldIndex("__tok")
 
     // pass 1: per-partition (rows, token total) — one tiny row per partition

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -24,14 +23,12 @@ import org.apache.spark.storage.StorageLevel
   *    Shuffle): its data rows go to salt hash(id) mod s, its query rows to
   *    every salt. Salting never changes the output.
   *
-  * Both block paths read one persisted base ([[vectorBase]]: Long id,
-  * float vector, norm) and learn what the block shuffle needs from a
+  * Each block path reads its own cached base ([[vectorBase]]: Long id,
+  * float vector, norm) and learns what the block shuffle needs from a
   * single pre-pass. lshTopK's [[prePass]] is one job with no exchange
   * that fills the cache and returns the row count and the first row's
   * vector size; ivfTopK's k-means sample plays that part when it is
-  * shorter than `sampleSize`. The base does not depend on a method's
-  * parameters, so lshTopK and ivfTopK on one input persist the same plan
-  * and the second call reads the first call's cache.
+  * shorter than `sampleSize`.
   */
 object Similarity {
 
@@ -137,19 +134,13 @@ object Similarity {
       else BlockStats(saltsOf(counts.where(col("count") > bound).as[(Long, Long)].collect()), None)
     }
 
-  /** The persisted (__id, __v, __n) projection both block paths read:
-    * Long ids, float vectors and their norms, so the input lineage and the
-    * norm fold run once. Its plan depends only on the input and the two
-    * columns, so a second top-k over the same input finds it cached (and
-    * does not persist it again). Rotating key: a caller may build a
-    * second top-k (e.g. cosineNearDupes after ann_lsh_topk) before this
-    * one's consumers have executed. */
-  private def vectorBase(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val base = df.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).cast("array<float>").as("__v"), normCol(col(vecCol)).as("__n"))
-    if (base.storageLevel == StorageLevel.NONE) base.persist(StorageLevel.MEMORY_AND_DISK)
-    CacheRegistry.swapRotating("similarity.base", base)
-  }
+  /** The cached (__id, __v, __n) projection a block path reads: Long ids,
+    * float vectors and their norms, so the input lineage and the norm fold
+    * run once. A local checkpoint: the frames that read it own the cache,
+    * and Spark's ContextCleaner drops it once they are unreachable. */
+  private def vectorBase(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    GraftSqlBridge.localCheckpoint(df.select(col(idCol).cast("long").as("__id"),
+      col(vecCol).cast("array<float>").as("__v"), normCol(col(vecCol)).as("__n")))
 
   /** The single pre-pass over a [[vectorBase]]: one job with no exchange
     * fills its cache and returns (row count, vector size of the first row),
@@ -300,15 +291,15 @@ object Similarity {
     * row lands in one bucket per band and is both a query and a data row
     * there, so the block core scores each bucket's members against each
     * other and merges a query's winners across bands, dropping a neighbor
-    * met in several bands. One pre-pass ([[prePass]]) over the shared base
+    * met in several bands. One pre-pass ([[prePass]]) over the cached base
     * gives the row count and, from the first row, the hyperplanes'
     * dimension; an empty input returns no rows. An input of at most the
     * block bound is hashed on its way to the shuffle. Above the bound the
-    * hashed base is persisted and, once the bucket counts ([[blockStats]])
-    * have filled it, replaces the base in the cache, so the counts and the
-    * block rows read one hash per row and one copy of the vectors stays
-    * cached: a bucket with one member never reaches the shuffle, and
-    * buckets above the bound are salted. `idCol`
+    * hashed base is cached too, and the bucket counts ([[blockStats]])
+    * fill it and cut its lineage, so the counts and the block rows read
+    * one hash per row and the base, read by nothing else, is freed: one
+    * copy of the vectors stays cached. A bucket with one member never
+    * reaches the shuffle, and buckets above the bound are salted. `idCol`
     * must be integral (byte, short, int or long): the core keys rows on
     * Long ids, and any other type is refused before a job runs. Returns
     * (idCol, neighbor, cosine, rank). */
@@ -356,17 +347,11 @@ object Similarity {
     val bpb = bitsPerBand
     val bound = blockRows(dim)
     val bucketUdf = udf((v: Array[Float]) => bandBuckets(v, planes.value, nb, bpb))
-    val hashed = base.withColumn("__b", bucketUdf(col("__v")))
+    val buckets = base.withColumn("__b", bucketUdf(col("__v")))
     // above the bound the bucket stats and the block rows both read the
-    // buckets: persist them, so that no row is hashed twice
-    if (rows > bound) {
-      if (hashed.storageLevel == StorageLevel.NONE) hashed.persist(StorageLevel.MEMORY_AND_DISK)
-      CacheRegistry.swapRotating("similarity.lshHashed", hashed)
-    }
+    // buckets: cache them, so that no row is hashed twice
+    val hashed = if (rows > bound) GraftSqlBridge.localCheckpoint(buckets) else buckets
     val stats = blockStats(hashed, explode(col("__b")), bound, rows)
-    // the stats aggregate filled the hashed cache, which holds every base
-    // column: release the base, so that one copy of the vectors stays cached
-    if (rows > bound) CacheRegistry.release("similarity.base", base)
     val hot = stats.salts
     val shared = stats.shared.map(spark.sparkContext.broadcast(_))
     hashed.as[(Long, Array[Float], Double, Array[Long])].flatMap { case (id, v, n, buckets) =>
@@ -469,7 +454,7 @@ object Similarity {
     * vectors into `nLists` cells; each query probes its `nProbe` nearest
     * cells and computes exact cosine only there. The scale path when LSH's
     * hyperplane bucketing fits poorly (clustered embeddings). Centroids
-    * train driver-side on a bounded deterministic sample of the shared base
+    * train driver-side on a bounded deterministic sample of the cached base
     * and broadcast. In the block core a cell is a block: every vector is a
     * data row of its nearest cell and a query row of each probed cell (one
     * Both row where the two coincide). Cells above the block bound are
@@ -498,7 +483,7 @@ object Similarity {
     import spark.implicits._
     val base = vectorBase(df, idCol, vecCol)
     // the first sampleSize rows of the base in scan order; reading them
-    // also pre-fills its cache
+    // also fills its cache (the checkpoint fills the partitions it skipped)
     val sample: Array[Array[Float]] = base
       .select(col("__v")).limit(sampleSize)
       .as[Array[Float]].collect()

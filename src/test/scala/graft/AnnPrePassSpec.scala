@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 
 /** The ANN paths' single pre-pass: the jobs lshTopK and ivfTopK run before
-  * their block shuffle, the base they share, the hashed cache above the
-  * bound, and empty inputs. */
+  * their block shuffle, the lifetime of each call's cached base, the hashed
+  * cache above the bound, and empty inputs. */
 class AnnPrePassSpec extends SparkSpec {
 
   private def sc = spark.sparkContext
@@ -36,10 +36,7 @@ class AnnPrePassSpec extends SparkSpec {
     }
   }
 
-  private def dropCaches(): Unit = {
-    CacheRegistry.clearAll()
-    spark.catalog.clearCache()
-  }
+  private def dropCaches(): Unit = CacheRegistry.clearAll()
 
   /** `n` 8-dim vectors in one partition, far below the block bound: a
     * limit over it scans that partition in one job. */
@@ -68,35 +65,37 @@ class AnnPrePassSpec extends SparkSpec {
     assert(full.count() == 40)
   }
 
-  test("lshTopK then ivfTopK on one frame persist one shared base") {
-    dropCaches()
-    val before = sc.getPersistentRDDs.keySet
-    val df = vectors(40)
-    val lsh = Similarity.lshTopK(df, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4).collect()
-    val ivf = Similarity.ivfTopK(df, "vec_id", "embedding", 1, nLists = 4, nProbe = 4).collect()
-    assert(lsh.nonEmpty && ivf.length == 40)
-    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
-    dropCaches()
+  test("lshTopK and ivfTopK: each call's base is freed once its frames are unreachable") {
+    val before = cachedRdds
+    // the top-k frame lives only inside `run`
+    def run(top: DataFrame => DataFrame): Set[Int] = {
+      val out = top(vectors(40))
+      assert(out.count() > 0)
+      cachedRdds -- before
+    }
+    val lsh = run(Similarity.lshTopK(_, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4))
+    val ivf = run(Similarity.ivfTopK(_, "vec_id", "embedding", 1, nLists = 4, nProbe = 4)) -- lsh
+    assert(lsh.size == 1 && ivf.size == 1, s"each call caches its own base: $lsh, $ivf")
+    assert(gcUntil()((cachedRdds -- before).isEmpty), s"still cached: ${cachedRdds -- before}")
   }
 
-  test("lshTopK above the bound: the filled hashed cache replaces the base and the row pass reads it") {
-    dropCaches()
-    val before = sc.getPersistentRDDs.keySet
+  test("lshTopK above the bound: while its frame is alive only the hashed cache survives, and the row pass reads it") {
+    val before = cachedRdds
     val df = vectors(40)
     def top() = Similarity.lshTopK(df, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4)
     val want = top().collect().toSet
-    dropCaches()
+    assert(gcUntil()((cachedRdds -- before).isEmpty), "the unbounded call's base was not freed")
     Similarity.blockRowsOverride = 4
     try {
       val bounded = top()
-      val cached = sc.getPersistentRDDs.keySet -- before
+      // the bucket counts filled the hashed cache and cut its lineage, so
+      // nothing reads the base any more
+      assert(gcUntil()((cachedRdds -- before).size <= 1))
+      val cached = cachedRdds -- before
       assert(cached.size == 1, "the hashed projection only, no base beside it")
       assert(bounded.collect().toSet == want)
-      assert(sc.getPersistentRDDs.keySet -- before == cached, "the hashed cache was not rebuilt")
-    } finally {
-      Similarity.blockRowsOverride = 0
-      dropCaches()
-    }
+      assert(cachedRdds -- before == cached, "the hashed cache was not rebuilt")
+    } finally Similarity.blockRowsOverride = 0
   }
 
   test("empty input: lshTopK, ivfTopK and cosineNearDupes return no rows, with a non-empty call's schema") {

@@ -137,6 +137,29 @@ in culpa qui officia deserunt mollit anim id est laborum""".replace("\n", " ")
     } finally spark.conf.unset("spark.graft.uf.driverEdgeLimit")
   }
 
+  test("components: a caller's cached edges stay cached, and a distributed run registers no cache") {
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val rng = new scala.util.Random(7)
+    val edges = (0 until 200)
+      .map(_ => (rng.nextInt(80).toLong, rng.nextInt(80).toLong))
+      .filter(p => p._1 != p._2)
+      .toDF("doc", "rep").repartition(4)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = labels(MinhashDedup.components(edges, driverEdgeLimit = 0L))
+    assert(cacheManager.isEmpty, "the distributed path left a CacheManager entry")
+    edges.cache()
+    try {
+      assert(labels(MinhashDedup.components(edges, driverEdgeLimit = 0L)) == dist)
+      assert(labels(MinhashDedup.components(edges, driverEdgeLimit = 10000000L)) == dist)
+      assert(edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "components dropped the caller's cache")
+    } finally edges.unpersist(blocking = true)
+    assert(cacheManager.isEmpty, "components registered a cache of its own")
+  }
+
   test("exact dedup keeps min id per identical text") {
     val df = Seq((10L, "aaa"), (3L, "aaa"), (5L, "bbb")).toDF("doc_id", "text")
     val out = ExactDedup(df, "doc_id", "text").collect()
@@ -238,6 +261,22 @@ in culpa qui officia deserunt mollit anim id est laborum""".replace("\n", " ")
     val nullSafe = MinhashDedup.dedupWithIndex(withNull, "id", "text", idx)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("minhash_keep")).toMap
     assert(nullSafe(9L)) // no shingles -> never an index match
+  }
+
+  test("minhash index mode, loose: the signatures are read from one cached table") {
+    val a = "the quick brown fox jumps over the lazy dog again and again today"
+    val b = "completely different content about mountains rivers and ancient forests here"
+    val df = Seq((1L, a), (2L, a + " extra"), (3L, b)).toDF("id", "text")
+    val idx = MinhashDedup.buildIndex(Seq((100L, a)).toDF("id", "text"), "id", "text")
+    val loose = MinhashDedup.dedupWithIndex(df, "id", "text", idx, onlyDedupInIndex = false)
+    // the index probe and the clustering read the corpus signatures from
+    // one materialised table, so the signature UDF runs once
+    val sigReads = loose.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.output.exists(_.name == "sig") => r.rdd.id
+    }
+    assert(sigReads.nonEmpty && sigReads.distinct.size == 1, loose.queryExecution.optimizedPlan)
+    assert(loose.collect().map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("minhash_keep")).toMap ==
+      Map(1L -> false, 2L -> false, 3L -> true))
   }
 
   test("url dedup index mode: index urls drop everywhere; corpus-vs-corpus optional") {

@@ -31,6 +31,25 @@ class MeasureSpec extends SparkSpec {
     assert(plan.contains("== Physical Plan =="))
   }
 
+  test("query: a query that reaches an operator cache leaves nothing cached once its frames are dropped") {
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val samplers = Seq("hard_sampler", "cdf_sampler", "hard_sampler_frac")
+    val ann = Seq("ann_lsh_topk", "ann_lsh_topk_exact", "ann_ivf_topk_exact", "cosine_near_dup")
+    val dedup = Seq("exact_substr", "exact_substr_short", "exact_substr_anchored",
+      "minhash_dedup_exact", "simhash_dedup_exact", "sentence_dedup_exact", "sentence_dedup_sent",
+      "bloom_dedup_exact", "bloom_dedup", "minhash_dedup_index", "sentence_dedup_index",
+      "url_dedup_index")
+    val twins = Seq("minhash_dedup", "minhash_dedup_dist", "sentence_dedup", "simhash_dedup")
+    for (name <- samplers ++ ann ++ dedup ++ twins) {
+      val before = cachedRdds
+      Measure.query(spark, sf, Seq(name), reps = 1)
+      assert(cacheManager.isEmpty, s"$name left a CacheManager entry")
+      assert(gcUntil()((cachedRdds -- before).isEmpty), s"$name still caches RDDs ${cachedRdds -- before}")
+    }
+  }
+
   test("dedup: UF and distributed labels agree, guarded and fallback ExactDedup keep the same count") {
     val r = Measure.dedup(spark, 400)
     assert(r.edges > 0 && r.removed > 0)

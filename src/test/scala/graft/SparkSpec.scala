@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CachedRdds
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -7,6 +8,24 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for operator tests. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   implicit lazy val spark: SparkSession = SparkTestSession.session
+
+  /** Ids of the RDDs the session has persisted or still holds blocks of. */
+  def cachedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet ++ CachedRdds(spark.sparkContext)
+
+  /** Whether `done` holds within `timeoutMs`, polled after each
+    * `System.gc()`, the way Spark's ContextCleanerSuite waits for the
+    * cleaner to drop what became unreachable. */
+  def gcUntil(timeoutMs: Long = 30000L)(done: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var ok = done
+    while (!ok && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+      ok = done
+    }
+    ok
+  }
 }
 
 object SparkTestSession {
