@@ -171,7 +171,8 @@ object ScaleEvidence {
       // and measured in BENCH.md §sf1:
       //  * centering — hyperplane-LSH bucket bits are ~Bernoulli(1/2) only
       //    for centered data; all-positive vectors collapse onto a few
-      //    bucket patterns and the ids-only self-join explodes;
+      //    hot buckets, salted into block groups whose scored pairs grow
+      //    with the bucket's square;
       //  * dimensionality — at 16 dims random-pair cosines are wide, so
       //    even 20-bit band keys collide pathologically (measured: max
       //    bucket 1876, ~0.5G candidate pairs at 2M → spill filled 77 GB

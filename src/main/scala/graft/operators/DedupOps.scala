@@ -421,15 +421,10 @@ object SimHashDedup {
 
     val comps = MinhashDedup.components(exactEdges.union(repEdges))
     // annotate every input row: the simhash by a per-row withColumn, the
-    // cluster by a LEFT join on id. `comps` holds one row per clustered
-    // doc, so a null id keeps its row (null cluster → its own id) and a
-    // repeated id keeps each of its rows. The per-row UDF pass is the
+    // cluster by withClusters' LEFT join on id. The per-row UDF pass is the
     // second one; candidate generation above reads the cached projection.
-    df.withColumn("simhash", simhashUdf(col(textCol)))
-      .join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
-      .withColumn("simhash_cluster", coalesce(col("cluster"), col(idCol)))
-      .drop("cluster")
-      .withColumn("simhash_keep", col("simhash_cluster") === col(idCol))
+    MinhashDedup.withClusters(df.withColumn("simhash", simhashUdf(col(textCol))), idCol, comps,
+      "simhash_cluster", "simhash_keep")
   }
 }
 

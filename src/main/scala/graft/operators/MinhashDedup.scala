@@ -384,18 +384,25 @@ object MinhashDedup {
     labels
   }
 
+  /** Labels every row of `df` from [[components]]' (doc, cluster) rows:
+    * `clusterCol` is its cluster, or its own id when it is in none, and
+    * `keepCol` marks the survivor, the row whose id is its cluster (the
+    * min id). A LEFT join on the id, so a null id keeps its row (null
+    * cluster → its own id) and a repeated id keeps each of its rows. */
+  def withClusters(df: DataFrame, idCol: String, comps: DataFrame,
+                   clusterCol: String, keepCol: String): DataFrame =
+    df.join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
+      .withColumn(clusterCol, coalesce(col("cluster"), col(idCol)))
+      .drop("cluster")
+      .withColumn(keepCol, col(clusterCol) === col(idCol))
+
   /** Full flow: annotate each row with (minhash_cluster, minhash_keep).
     * Survivor per cluster = min id. Rows in no cluster keep their own id. */
   def dedup(df: DataFrame, idCol: String, textCol: String,
             cfg: MinhashDedupConfig = MinhashDedupConfig())
-           (implicit spark: SparkSession): DataFrame = {
-    val sigs = signatures(df, idCol, textCol, cfg)
-    val comps = components(duplicateEdges(sigs))
-    df.join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
-      .withColumn("minhash_cluster", coalesce(col("cluster"), col(idCol)))
-      .drop("cluster")
-      .withColumn("minhash_keep", col("minhash_cluster") === col(idCol))
-  }
+           (implicit spark: SparkSession): DataFrame =
+    withClusters(df, idCol, components(duplicateEdges(signatures(df, idCol, textCol, cfg))),
+      "minhash_cluster", "minhash_keep")
 
   /** The reference's MinhashConfig.__str__ config fingerprint, carried as
     * column metadata on the index so a mismatched query config fails fast
@@ -447,19 +454,14 @@ object MinhashDedup {
       .join(indexSigs.select("bucket", "sig").distinct(), Seq("bucket", "sig"), "left_semi")
       .select(col("doc")).distinct()
       .withColumn("__in_index", lit(true))
-    val base =
+    val clustered =
       if (onlyDedupInIndex)
         df.withColumn("minhash_cluster", col(idCol))
-      else {
-        val comps = components(duplicateEdges(sigs))
-        df.join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
-          .withColumn("minhash_cluster", coalesce(col("cluster"), col(idCol)))
-          .drop("cluster")
-      }
-    base
+          .withColumn("minhash_keep", col("minhash_cluster") === col(idCol))
+      else withClusters(df, idCol, components(duplicateEdges(sigs)), "minhash_cluster", "minhash_keep")
+    clustered
       .join(inIndex.withColumnRenamed("doc", idCol), Seq(idCol), "left")
-      .withColumn("minhash_keep",
-        col("__in_index").isNull && col("minhash_cluster") === col(idCol))
+      .withColumn("minhash_keep", col("__in_index").isNull && col("minhash_keep"))
       .drop("__in_index")
   }
 }

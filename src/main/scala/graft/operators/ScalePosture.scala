@@ -72,7 +72,8 @@ object ScalePosture {
         "-> ~0.5G candidate pairs). Use IVF for low-dim embeddings.")
     require(componentMeanAbsMax <= maxAbsMean,
       f"embedding components are not centered (max |mean| = $componentMeanAbsMax%.3f > " +
-        f"$maxAbsMean%.2f): uncentered vectors collapse onto a few bucket bit patterns " +
-        "and the ids-only self-join explodes. Center (subtract the component means) first.")
+        f"$maxAbsMean%.2f): uncentered vectors collapse onto a few hot buckets, salted into " +
+        "block groups whose scored pairs grow with the bucket's square. " +
+        "Center (subtract the component means) first.")
   }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -21,7 +20,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    row. A block whose data side exceeds the bound is split
   *    deterministically into salts (the skew split of Hyper Dimension
   *    Shuffle): its data rows go to salt hash(id) mod s, its query rows to
-  *    every salt. Salting never changes the output.
+  *    every salt. Salting never changes the output. A query's local lists
+  *    merge across salts and bands through the [[TopK]] that scored them.
   *
   * Each block path reads its own cached base ([[vectorBase]]: Long id,
   * float vector, norm) and learns what the block shuffle needs from a
@@ -32,28 +32,40 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   */
 object Similarity {
 
-  private def normCol(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def normCol(v: Column): Column =
     sqrt(aggregate(transform(v.cast("array<double>"), x => x * x), lit(0.0), (acc, x) => acc + x))
 
-  /** The k best (cosine, neighbor) pairs offered so far, best first. */
+  /** The norm [[normCol]] computes, on the driver or in a task. */
+  private def norm(v: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** The k best (cosine, neighbor) pairs offered so far, best first. A
+    * neighbor already held is not taken twice: a repeat (the same neighbor
+    * met in another band) has the same cosine bits, so it sorts right
+    * after its twin and is dropped there. */
   private final class TopK(k: Int) {
     val cos = new Array[Double](k)
     val ids = new Array[Long](k)
     var size = 0
 
-    def offer(c: Double, id: Long): Unit =
-      if (size < k || before(c, id, cos(k - 1), ids(k - 1))) {
-        var i = math.min(size, k - 1)
-        while (i > 0 && before(c, id, cos(i - 1), ids(i - 1))) {
-          cos(i) = cos(i - 1); ids(i) = ids(i - 1); i -= 1
-        }
+    def offer(c: Double, id: Long): Unit = {
+      var i = size
+      while (i > 0 && before(c, id, cos(i - 1), ids(i - 1))) i -= 1
+      if (i < k && (i == 0 || ids(i - 1) != id)) {
+        val tail = math.min(size, k - 1) - i
+        System.arraycopy(cos, i, cos, i + 1, tail)
+        System.arraycopy(ids, i, ids, i + 1, tail)
         cos(i) = c; ids(i) = id
         if (size < k) size += 1
       }
+    }
   }
 
   /** The ranking order: cosine desc with NaN last and -0.0 == 0.0, ties to
-    * the smaller neighbor — the order topKPerQuery's merge uses. */
+    * the smaller neighbor. */
   private[graft] def before(c1: Double, id1: Long, c2: Double, id2: Long): Boolean =
     if (c1 == c2 || (c1.isNaN && c2.isNaN)) id1 < id2
     else c2.isNaN || c1 > c2
@@ -137,10 +149,17 @@ object Similarity {
   /** The cached (__id, __v, __n) projection a block path reads: Long ids,
     * float vectors and their norms, so the input lineage and the norm fold
     * run once. A local checkpoint: the frames that read it own the cache,
-    * and Spark's ContextCleaner drops it once they are unreachable. */
-  private def vectorBase(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    * and Spark's ContextCleaner drops it once they are unreachable. Float
+    * vectors are not cast: the optimizer drops a cast that only widens
+    * `containsNull`, and the checkpoint would lose its statistics. */
+  private def vectorBase(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val v = df.schema(vecCol).dataType match {
+      case ArrayType(FloatType, _) => col(vecCol)
+      case _ => col(vecCol).cast("array<float>")
+    }
     GraftSqlBridge.localCheckpoint(df.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).cast("array<float>").as("__v"), normCol(col(vecCol)).as("__n")))
+      v.as("__v"), normCol(col(vecCol)).as("__n")))
+  }
 
   /** The single pre-pass over a [[vectorBase]]: one job with no exchange
     * fills its cache and returns (row count, vector size of the first row),
@@ -205,19 +224,31 @@ object Similarity {
     t
   }
 
-  /** The block core shared by lshTopK and ivfTopK: one shuffle groups the
-    * candidate rows by (block, salt), [[scoreGroup]] keeps each query's
-    * local top-k, and topKPerQuery merges those across groups. `dedupe`
-    * drops the repeats of a neighbor that shares several blocks with its
-    * query. Output ids are cast back to `idType`. */
-  private def blockTopK(rows: Dataset[BlockRow], k: Int, dedupe: Boolean,
-                        idCol: String, idType: DataType): DataFrame = {
+  /** The block core's local lists: one shuffle groups the candidate rows
+    * by (block, salt), and [[scoreGroup]] emits each query's local top-k
+    * there as (qid, neighbor, cosine). A query's global top-k neighbor is
+    * in the local list of every group where the two met. */
+  private def localTopK(rows: Dataset[BlockRow], k: Int): Dataset[(Long, Long, Double)] = {
     import rows.sparkSession.implicits._
-    val scored = rows.groupBy("block", "salt").as[(Long, Int), BlockRow]
+    rows.groupBy("block", "salt").as[(Long, Int), BlockRow]
       .flatMapSortedGroups(col("role"))((_, it) => scoreGroup(it, k))
-      .toDF("__qid", "neighbor", "cosine")
-    topKPerQuery(scored, k, dedupe).select(col("__qid").cast(idType).as(idCol),
-      col("neighbor").cast(idType).as("neighbor"), col("cosine"), col("rank"))
+  }
+
+  /** The block core shared by lshTopK and ivfTopK: each query's local
+    * lists ([[localTopK]]) merge through one [[TopK]], which drops a
+    * neighbor met in several blocks, and rank 1..k in its order. Output
+    * ids are cast back to `idType`. */
+  private def blockTopK(rows: Dataset[BlockRow], k: Int, idCol: String,
+                        idType: DataType): DataFrame = {
+    import rows.sparkSession.implicits._
+    localTopK(rows, k).groupBy("_1").as[Long, (Long, Long, Double)]
+      .flatMapGroups { (qid, it) =>
+        val top = new TopK(k)
+        it.foreach { case (_, n, c) => top.offer(c, n) }
+        Iterator.tabulate(top.size)(i => (qid, top.ids(i), top.cos(i), i + 1))
+      }
+      .select(col("_1").cast(idType).as(idCol), col("_2").cast(idType).as("neighbor"),
+        col("_3").as("cosine"), col("_4").as("rank"))
   }
 
   /** Exact top-k neighbors per row: the whole table is collected and
@@ -251,17 +282,10 @@ object Similarity {
     queries.mapPartitions { it =>
       val ids = bc.value.map(_._1)
       val vecs = bc.value.map(_._2)
-      val norms = vecs.map { v =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-        math.sqrt(s)
-      }
+      val norms = vecs.map(norm)
       val top = new TopK(kk)
       it.flatMap { case (qid, qv) =>
-        var qn = 0.0
-        var i = 0
-        while (i < qv.length) { qn += qv(i).toDouble * qv(i).toDouble; i += 1 }
-        score(qid, qv, math.sqrt(qn), ids, vecs, norms, ids.length, top)
+        score(qid, qv, norm(qv), ids, vecs, norms, ids.length, top)
         Array.tabulate(top.size)(r => (qid, top.ids(r), top.cos(r), r + 1))
       }
     }.toDF(idCol, "neighbor", "cosine", "rank")
@@ -307,7 +331,7 @@ object Similarity {
               bands: Int = 8, bitsPerBand: Int = 8, seed: Long = 42L)
              (implicit spark: SparkSession): DataFrame = {
     val idType = integralId(df, idCol)
-    blockTopK(lshRows(df, idCol, vecCol, bands, bitsPerBand, seed), k, dedupe = true, idCol, idType)
+    blockTopK(lshRows(df, idCol, vecCol, bands, bitsPerBand, seed), k, idCol, idType)
   }
 
   /** The band bucket keys of `vec`: per band, its `bitsPerBand` hyperplane
@@ -361,30 +385,6 @@ object Similarity {
     }
   }
 
-  /** Per-query top-k by (cosine desc, NaN last, neighbor asc) over slim
-    * (__qid, neighbor, cosine) rows — the local winners of the block
-    * groups. k == 1 (the common ANN-query case) takes a groupBy
-    * min-struct: a hash aggregate with map-side partial aggregation and NO
-    * per-group sort, so a hot query id combines before the exchange; a
-    * repeated neighbor is harmless there. k > 1 drops repeats when
-    * `dedupe` and ranks with a row_number window over -cosine, which puts
-    * NaN last exactly as min(-cosine) does. */
-  private def topKPerQuery(scored: DataFrame, k: Int, dedupe: Boolean): DataFrame = {
-    if (k == 1) {
-      scored
-        .groupBy("__qid")
-        .agg(min(struct(negate(col("cosine")).as("__nc"), col("neighbor"),
-          col("cosine"))).as("__best"))
-        .select(col("__qid"), col("__best.neighbor").as("neighbor"),
-          col("__best.cosine").as("cosine"), lit(1).as("rank"))
-    } else {
-      val w = Window.partitionBy("__qid").orderBy(negate(col("cosine")), col("neighbor"))
-      (if (dedupe) scored.dropDuplicates("__qid", "neighbor") else scored)
-        .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-        .select(col("__qid"), col("neighbor"), col("cosine"), col("rank"))
-    }
-  }
-
   /** Deterministic driver-side Lloyd k-means over a bounded sample — the
     * coarse quantizer for ivfTopK. Seeding: evenly spaced sample points
     * (deterministic, no RNG state dependence); empty cells keep their
@@ -421,16 +421,21 @@ object Similarity {
     cents
   }
 
+  /** Squared distance of `v` to centroid `cc` over their common prefix. */
+  private def dist2(v: Array[Float], cc: Array[Float]): Double = {
+    var d2 = 0.0
+    var d = 0
+    val len = math.min(v.length, cc.length)
+    while (d < len) { val x = v(d) - cc(d); d2 += x * x; d += 1 }
+    d2
+  }
+
   private[graft] def nearestCentroid(v: Array[Float], cents: Array[Array[Float]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      var d2 = 0.0
-      var d = 0
-      val cc = cents(c)
-      val len = math.min(v.length, cc.length)
-      while (d < len) { val x = v(d) - cc(d); d2 += x * x; d += 1 }
+      val d2 = dist2(v, cents(c))
       if (d2 < bestD) { bestD = d2; best = c }
       c += 1
     }
@@ -438,17 +443,9 @@ object Similarity {
   }
 
   private[graft] def nearestCells(v: Array[Float], cents: Array[Array[Float]],
-                                      nProbe: Int): Array[Int] = {
-    val ds = cents.indices.map { c =>
-      var d2 = 0.0
-      var d = 0
-      val cc = cents(c)
-      val len = math.min(v.length, cc.length)
-      while (d < len) { val x = v(d) - cc(d); d2 += x * x; d += 1 }
-      (d2, c)
-    }
-    ds.sortBy(p => (p._1, p._2)).take(nProbe).map(_._2).toArray
-  }
+                                      nProbe: Int): Array[Int] =
+    cents.indices.map(c => (dist2(v, cents(c)), c))
+      .sortBy(p => (p._1, p._2)).take(nProbe).map(_._2).toArray
 
   /** IVF-flat approximate top-k: a coarse k-means quantizer partitions the
     * vectors into `nLists` cells; each query probes its `nProbe` nearest
@@ -472,7 +469,7 @@ object Similarity {
     import spark.implicits._
     val idType = integralId(df, idCol)
     val rows = ivfRows(df, idCol, vecCol, nLists, nProbe, kmeansIters, sampleSize)
-    blockTopK(rows.getOrElse(spark.emptyDataset[BlockRow]), k, dedupe = false, idCol, idType)
+    blockTopK(rows.getOrElse(spark.emptyDataset[BlockRow]), k, idCol, idType)
   }
 
   /** ivfTopK's block rows, or None when the k-means sample is empty:
@@ -505,30 +502,29 @@ object Similarity {
   }
 
   /** Embedding near-duplicate detection: pairs with cosine ≥ threshold
-    * (via LSH candidates), connected-components, min-id survivor.
-    * k bounds neighbors per vector — clustering only needs CONNECTIVITY
-    * (components close the transitive hull), so a mass-duplicated embedding
-    * cluster doesn't need its full clique materialized; k=16 links even a
-    * huge duplicate group into one component with high probability while
-    * capping the window/edge volume. */
+    * (via LSH candidates), connected-components, min-id survivor. The
+    * edges are the block core's local lists ([[localTopK]]) filtered to
+    * the threshold, with no merge or rank: clustering only needs
+    * CONNECTIVITY (components close the transitive hull), and a local
+    * list holds every global top-k neighbor met in its group, so the
+    * extra edges are true near-dup links too. `k` bounds the edges a
+    * query keeps per block, so a mass-duplicated embedding cluster never
+    * materializes its full clique; k=16 links even a huge duplicate group
+    * into one component with high probability. `idCol` must be integral,
+    * as for [[lshTopK]]. */
   def cosineNearDupes(df: DataFrame, idCol: String, vecCol: String,
                       threshold: Double = 0.95, bands: Int = 16, bitsPerBand: Int = 8,
                       k: Int = 16)
                      (implicit spark: SparkSession): DataFrame = {
+    val idType = integralId(df, idCol)
     // Collapse byte-identical vectors FIRST: they are near-dups by
     // definition (cosine 1 ≥ any threshold), and a mass-duplicated
     // embedding would otherwise regenerate its full clique in every LSH
-    // band — the dominant degenerate case at web scale. LSH then runs over
-    // DISTINCT vectors only.
-    // r8 shape: vector identity is a 128-bit pair of independent xxhash64
-    // folds, so the collapse groupBy and the rep join-back move 16-byte
-    // keys instead of the fat embedding arrays (the r7 shape grouped and
-    // null-safe-joined on the full array<float>). False identity needs
-    // both 64-bit hashes to collide on different vectors: ~2^-128 per
-    // pair, ≪ 1 expected even at 10^12 rows — the same analysis as the
-    // minhash band folds and ExactSubstrDedup.spanHashesFromWordHashes.
-    // The fat table is touched by one broadcastable semi-join (rep ids)
-    // only.
+    // band. LSH then runs over DISTINCT vectors only. Vector identity is a
+    // 128-bit pair of independent xxhash64 folds, so the collapse moves
+    // 16-byte keys, not embedding arrays; a false identity needs both
+    // hashes to collide (~2^-128 per pair). The fat table is touched by
+    // one broadcastable semi-join (rep ids) only.
     val v = col(vecCol).cast("array<float>")
     val slim = df.select(col(idCol), xxhash64(v).as("__vh1"),
       xxhash64(v, lit(0x9E3779B97F4A7C15L)).as("__vh2"))
@@ -540,15 +536,12 @@ object Similarity {
       withRep.where(col(idCol) === col("__rep")).select(col(idCol)),
       Seq(idCol), "left_semi")
       .select(col(idCol), col(vecCol))
-    val top = lshTopK(uniques, idCol, vecCol, k = k, bands = bands, bitsPerBand = bitsPerBand)
-    // a zero vector's cosine is NaN, which Spark orders above every number
-    val lshEdges = top.where(!isnan(col("cosine")) && col("cosine") >= threshold)
-      .select(col(idCol).as("doc"), col("neighbor").as("rep"))
-      .where(col("doc") =!= col("rep"))
+    val local = localTopK(lshRows(uniques, idCol, vecCol, bands, bitsPerBand, seed = 42L), k)
+    // a zero vector's cosine is NaN, which Spark orders above every number;
+    // the core never pairs a row with itself
+    val lshEdges = local.where(!isnan(col("_3")) && col("_3") >= threshold)
+      .select(col("_1").cast(idType).as("doc"), col("_2").cast(idType).as("rep"))
     val comps = MinhashDedup.components(exactEdges.union(lshEdges))
-    df.join(comps.withColumnRenamed("doc", idCol), Seq(idCol), "left")
-      .withColumn("cosine_cluster", coalesce(col("cluster"), col(idCol)))
-      .drop("cluster")
-      .withColumn("cosine_keep", col("cosine_cluster") === col(idCol))
+    MinhashDedup.withClusters(df, idCol, comps, "cosine_cluster", "cosine_keep")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.operators._
 
 /** The ANN paths' single pre-pass: the jobs lshTopK and ivfTopK run before
@@ -111,6 +112,45 @@ class AnnPrePassSpec extends SparkSpec {
       assert(got.count() == 0, name)
       assert(got.schema == call(full).schema, name)
     }
+  }
+
+  test("lshTopK, ivfTopK and cosineNearDupes log no LogicalRDD output mismatch: their checkpoints keep their statistics") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // Spark warns and drops a checkpoint's statistics when its analyzed and
+    // optimized outputs differ in a type, e.g. a cast that only widens an
+    // array's containsNull, which the optimizer removes. A local Seq[Float]
+    // (like a Scala UDF's result) is an array<float> without nulls.
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("logicalRddWarnings", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("LogicalRDD") && e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    sc.setLogLevel("WARN")
+    try {
+      import spark.implicits._
+      val df = (0 until 40).map(i => (i.toLong, Seq.tabulate(8)(j => math.sin(i * 7 + j).toFloat)))
+        .toDF("vec_id", "embedding")
+      assert(!df.schema("embedding").dataType.asInstanceOf[ArrayType].containsNull)
+      assert(Similarity.lshTopK(df, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4).count() > 0)
+      assert(Similarity.ivfTopK(df, "vec_id", "embedding", 1, nLists = 4, nProbe = 4).count() == 40)
+      assert(Similarity.cosineNearDupes(df, "vec_id", "embedding").count() == 40)
+      // above the bound the hashed base is a second checkpoint
+      Similarity.blockRowsOverride = 4
+      try assert(Similarity.lshTopK(df, "vec_id", "embedding", 1, bands = 4, bitsPerBand = 4).count() > 0)
+      finally Similarity.blockRowsOverride = 0
+    } finally {
+      sc.setLogLevel("ERROR")
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warnings.isEmpty, s"LogicalRDD warned: $warnings")
   }
 
   test("lshTopK refuses a null first vector") {
