@@ -16,6 +16,8 @@ import graft.text.{FastRepetition, PyText, TextKernels, Tokenizer, ZhSegmenter}
   *   sbt -batch "runMain graft.Measure dedup 100000"
   *   sbt -batch "runMain graft.Measure scaling 20000"
   *   sbt -batch "runMain graft.Measure exact-substr /tmp/es_corpus.jsonl /tmp/es_out"
+  *   sbt -batch "runMain graft.Measure scale 2000000 ann_lsh"
+  *   sbt -batch "runMain graft.Measure streaming 200000 1 rocksdb"
   *
   * Every Spark layer runs on Bench's session conf with [[cpus]] cores and
   * is a function of a `SparkSession`, so a spec can call it; Spark phases
@@ -32,7 +34,9 @@ object Measure {
       |  plan <sfDir> <outDir> <suffix> [q,...|all]
       |  dedup [rows]
       |  scaling [rows]
-      |  exact-substr <in.jsonl> <out> [shortSpanWords] [anchorEvery]""".stripMargin
+      |  exact-substr <in.jsonl> <out> [shortSpanWords] [anchorEvery]
+      |  scale [rows] [phase,...|all|none]
+      |  streaming [rows] [filesPerTrigger] [hdfs|rocksdb]""".stripMargin
 
   /** SPARK_GRAFT_CPUS, else every processor this JVM sees. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -52,8 +56,9 @@ object Measure {
   def main(args: Array[String]): Unit = {
     val rest = args.drop(1).toList
     def num(i: Int, default: Long): Long = rest.lift(i).fold(default)(_.toLong)
-    def withSession(f: SparkSession => Unit): Unit = {
-      val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    def withSession(conf: (String, String)*)(f: SparkSession => Unit): Unit = {
+      val spark = conf.foldLeft(builder(s"local[$cpus]", cpus)) { case (b, (k, v)) => b.config(k, v) }
+        .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       try f(spark) finally spark.stop()
     }
@@ -61,16 +66,23 @@ object Measure {
       case ("kernel", _) => kernel(num(0, 4000).toInt)
       case ("scaling", _) => scaling(num(0, 200000))
       case ("query", sfDir :: qs :: _) =>
-        withSession(query(_, sfDir, queryNames(qs), num(2, 3).toInt))
+        withSession()(query(_, sfDir, queryNames(qs), num(2, 3).toInt))
       case ("plan", sfDir :: outDir :: suffix :: qs) =>
-        withSession(plan(_, sfDir, outDir, suffix, queryNames(qs.headOption.getOrElse("all"))))
+        withSession()(plan(_, sfDir, outDir, suffix, queryNames(qs.headOption.getOrElse("all"))))
       case ("dedup", _) =>
-        withSession { spark =>
+        withSession() { spark =>
           val r = dedup(spark, num(0, 100000))
           if (r.labelMismatches != 0 || r.guardedKept != r.fallbackKept) sys.exit(1)
         }
       case ("exact-substr", in :: out :: opt) =>
-        withSession(exactSubstr(_, in, out, opt.lift(0).map(_.toInt), opt.lift(1).map(_.toInt)))
+        withSession()(exactSubstr(_, in, out, opt.lift(0).map(_.toInt), opt.lift(1).map(_.toInt)))
+      case ("scale", _) =>
+        val phases = rest.lift(1).filter(_ != "all").fold(ScalePhases)(_.split(",").toSeq)
+        // at-scale rows stay comparable with BENCH.md: 64 shuffle partitions, 2 MB read splits
+        withSession("spark.sql.shuffle.partitions" -> "64",
+          "spark.sql.files.maxPartitionBytes" -> (2 * 1024 * 1024).toString)(scale(_, num(0, 2000000), phases))
+      case ("streaming", _) =>
+        withSession()(streaming(_, num(0, 200000), num(1, 1).toInt, rest.lift(2).getOrElse("hdfs")))
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
@@ -380,5 +392,229 @@ object Measure {
           .as("removed_word_positions"))
       .coalesce(1)
       .write.mode("overwrite").json(out)
+  }
+
+  // ---- scale -------------------------------------------------------------
+
+  /** The phases of [[scale]] in run order. */
+  val ScalePhases: Seq[String] = Seq("gen_corpus", "full_pipeline", "exact_dedup", "minhash_dedup",
+    "sentence_dedup", "url_dedup", "exact_substr", "exact_substr_anchored", "extract_general", "ann_lsh")
+
+  /** The at-scale evidence run: the headline operators over `rows`
+    * WebCorpusGen docs (2M is sf1, 10× every sf0.1 figure), one phase line
+    * each with its rows out and heap peak, then one `scale_evidence`
+    * summary line. `gen_corpus` always runs (every phase reads the cached
+    * corpus); the other phases run only if named in `phases`, so
+    * `tools/scale_evidence_isolated.sh` can give each phase its own JVM:
+    * in one JVM, a phase after `exact_substr`'s heap spike was measured up
+    * to 3.7× slower. Each phase starts after a `System.gc()`. Returns
+    * (phase, (sec, rows out)) in run order. */
+  def scale(spark: SparkSession, rows: Long, phases: Seq[String]): Seq[(String, (Double, Long))] = {
+    implicit val sp: SparkSession = spark
+    val meter = new PhaseMetrics(spark.sparkContext)
+    val results = scala.collection.mutable.ArrayBuffer[(PhaseMetrics.Phase, Long)]()
+    def phase(name: String)(body: => Long): Unit =
+      if (name == "gen_corpus" || phases.contains(name)) {
+        System.gc()
+        val (out, p) = meter.phase(name)(body)
+        results += p -> out
+        println(p.json("rows_out" -> out))
+      }
+    try {
+      phase("gen_corpus") { Bench.ensureCorpus(spark, rows); rows }
+      val corpus = spark.read.parquet(Bench.ensureCorpus(spark, rows))
+
+      // the headline quality pipeline's kept count
+      phase("full_pipeline")(Bench.pipelineDocsPerSec(spark, rows)._2)
+
+      // ---- dedup family over (url, text): ids+hashes through the shuffles
+      val docs = corpus.select(
+        col("url"), xxhash64(col("url")).as("doc_id"), col("text"))
+
+      phase("exact_dedup") {
+        ExactDedup(docs, "doc_id", "text")
+          .filter(!col("exact_keep")).count()
+      }
+
+      phase("minhash_dedup") {
+        MinhashDedup.dedup(docs, "doc_id", "text")
+          .filter(!col("minhash_keep")).count()
+      }
+
+      phase("sentence_dedup") {
+        SentenceDedup(docs, "doc_id", "text")
+          .filter(!col("sentence_dedup_keep")).count()
+      }
+
+      phase("url_dedup") {
+        UrlDedup(docs.withColumn("priority", col("doc_id") % 5),
+          "url", "doc_id", "priority").count()
+      }
+
+      phase("exact_substr") {
+        // rolling-hash span dedup incl. the short-span pass: the heaviest
+        // text-CPU dedup (tokenize + per-word hash + two span streams per
+        // doc), ids+positions only through the shuffle; stride-1 (every
+        // span start), where exact_substr_anchored below winnows
+        ExactSubstrDedup(docs, "doc_id", "text",
+          ExactSubstrConfig(shortSpanWords = Some(15)))
+          .filter(!col("exact_substr_keep")).count()
+      }
+
+      phase("exact_substr_anchored") {
+        // the declared 100 TB posture: winnowing anchors at w=8 sample
+        // ~2/(w+1) of the stride-1 spans content-defined, so copies anchor
+        // identically
+        ExactSubstrDedup(docs, "doc_id", "text",
+          ExactSubstrConfig(shortSpanWords = Some(15), anchorEvery = Some(8)))
+          .filter(!col("exact_substr_keep")).count()
+      }
+
+      phase("extract_general") {
+        // the general extractor over every page's raw html through the
+        // timeout sandbox: html is the fat column the other phases prune;
+        // this is the one pass that must read it
+        ExtractStage(corpus.select("url", "html"), "html", "text",
+          timeoutMs = 2000, extractor = TrafilaturaExtractor.extract)
+          .filter(length(col("text")) > 0).count()
+      }
+
+      // ---- ANN LSH over synthetic 64-dim vectors with planted 5-cliques
+      // (every 400th block of 5 ids shares a base vector + per-member jitter)
+      phase("ann_lsh") {
+        // Constructed like real text embeddings: 64-dim, components CENTERED
+        // in [-1, 1]. Two at-scale lessons are baked into these parameters
+        // and measured in BENCH.md §sf1:
+        //  * centering — hyperplane-LSH bucket bits are ~Bernoulli(1/2) only
+        //    for centered data; all-positive vectors collapse onto a few
+        //    hot buckets, salted into block groups whose scored pairs grow
+        //    with the bucket's square;
+        //  * dimensionality — at 16 dims random-pair cosines are wide, so
+        //    even 20-bit band keys collide pathologically (measured: max
+        //    bucket 1876, ~0.5G candidate pairs at 2M → spill filled 77 GB
+        //    of disk). At 64 dims with 24-bit bands the same corpus gives
+        //    max bucket 36 and ~6M unique pairs. Low-dim embeddings need
+        //    IVF, not hyperplane LSH.
+        val vecs = spark.range(rows).toDF("id")
+          .withColumn("base",
+            when(col("id") % 400 < 5, col("id") - (col("id") % 400)).otherwise(col("id")))
+          .withColumn("vec", expr(
+            """transform(sequence(0, 63), j ->
+               cast(pmod(hash(base * 64 + j), 2001) - 1000 as float) / 1000.0f +
+               cast(pmod(hash(id * 64 + j), 7) as float) / 10000.0f)"""))
+          .select(col("id"), col("vec"))
+        Similarity.lshTopK(vecs, "id", "vec", k = 5, bands = 8, bitsPerBand = 24).count()
+      }
+    } finally meter.detach()
+
+    val total = results.map(_._1.sec).sum
+    val peakHeap = results.map(_._1.peakHeapBytes).max
+    println(f"""{"metric":"scale_evidence","rows":$rows,"total_sec":$total%.1f,"peak_heap_gb":${peakHeap / 1e9}%.2f,"cpus":$cpus}""")
+    results.map { case (p, out) => p.name -> (p.sec, out) }.toSeq
+  }
+
+  // ---- streaming ---------------------------------------------------------
+
+  final case class StreamingResult(inputRows: Long, docsPerSec: Double, maxStateRows: Long,
+                                   finalStateRows: Long, evicted: Long, stateBound: Long)
+
+  /** The streaming path at scale over the real file source:
+    *
+    *   corpus → 20 parquet chunks, each stamped with its simulated ingest
+    *   minute as modification time (the file source reads in mtime order,
+    *   like successive CC dump shards) → readStream with
+    *   `filesPerTrigger` files per micro-batch → full quality pipeline →
+    *   stateful streaming exact dedup (event-time TTL) → noop sink
+    *
+    * One JSON line per micro-batch (rows/s, state-store rows) and one
+    * `streaming_smoke` summary line. `stateStore` is `hdfs` (the default
+    * store) or `rocksdb` (changelog checkpointing: state off the JVM heap,
+    * the scale-path store for large keyed state). Requires BOUNDED STATE:
+    * with a 3-minute TTL against a 30-second watermark, keys older than ~4
+    * chunks are evicted, so the state store must evict and stay below
+    * ~5 chunks of keys. The chunks are cached per `rows`; the query's
+    * checkpoint is deleted when the run ends. */
+  def streaming(spark: SparkSession, rows: Long, filesPerTrigger: Int,
+                stateStore: String = "hdfs"): StreamingResult = {
+    implicit val sp: SparkSession = spark
+    val storeConf = stateStore match {
+      case "hdfs" => Nil
+      case "rocksdb" => Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+      case other => throw new IllegalArgumentException(s"state store $other: expected hdfs or rocksdb")
+    }
+    val corpusPath = Bench.ensureCorpus(spark, rows)
+    val srcDir = new java.io.File(s"/tmp/graft_stream_src_$rows")
+    val nChunks = 20
+    val baseTs = 1700000000000L
+    if (!new java.io.File(srcDir, "_chunks_done").exists()) {
+      val corpus = spark.read.parquet(corpusPath)
+        .withColumn("__chunk", pmod(xxhash64(col("url")), lit(nChunks)))
+      val lastTs = baseTs + nChunks * 60000L
+      // one file per chunk, html dropped (the pipeline never reads it); the
+      // chunk just written is the only part file stamped later than any chunk
+      for (i <- 0 until nChunks) {
+        val ts = baseTs + i * 60000L
+        corpus.where(col("__chunk") === i)
+          .withColumn("warc_ts", (lit(ts) / 1000).cast("timestamp"))
+          .select("url", "warc_ts", "text", "lang")
+          .coalesce(1)
+          .write.mode(if (i == 0) "overwrite" else "append").parquet(srcDir.getPath)
+        srcDir.listFiles().filter(f => f.getName.startsWith("part-") && f.lastModified() > lastTs)
+          .foreach(_.setLastModified(ts))
+      }
+      new java.io.File(srcDir, "_chunks_done").createNewFile()
+    }
+
+    val schema = spark.read.parquet(srcDir.getPath).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger).parquet(srcDir.getPath)
+    val stages = Presets.fineweb(
+      urlFilter = new UrlFilter(blockListedDomains = WebCorpusGen.BlockedDomains),
+      languages = Some(Seq("en")),
+      badwords = WebCorpusGen.BadWordsFixture.asMap)
+    val piped = graft.streaming.StreamingQuality.run(stream, stages).filter(_.keep)
+    val dedup = graft.streaming.StreamingQuality.streamingExactDedup(
+      piped, watermarkDelay = "30 seconds", stateTtlMs = 3L * 60 * 1000)
+
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+    storeConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (progress, totalSec) = try {
+      val q = dedup.toDF().writeStream.format("noop")
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      val t0 = System.nanoTime()
+      try q.processAllAvailable() finally q.stop()
+      (q.recentProgress, (System.nanoTime() - t0) / 1e9)
+    } finally {
+      storeConf.foreach { case (k, _) => spark.conf.unset(k) }
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+    }
+
+    var cumulativeIn = 0L
+    var maxState = 0L
+    var totalRemoved = 0L
+    var lastState = 0L
+    progress.foreach { p =>
+      val so = p.stateOperators
+      val stateRows = if (so.nonEmpty) so(0).numRowsTotal else 0L
+      val removed = if (so.nonEmpty) so(0).numRowsRemoved else 0L
+      cumulativeIn += p.numInputRows
+      maxState = math.max(maxState, stateRows)
+      totalRemoved += removed
+      lastState = stateRows
+      println(f"""{"batch":${p.batchId},"input_rows":${p.numInputRows},"rows_per_sec":${p.processedRowsPerSecond}%.0f,"state_rows":$stateRows,"state_removed":$removed}""")
+    }
+    val docsPerSec = cumulativeIn / totalSec
+    println(f"""{"metric":"streaming_smoke","rows":$cumulativeIn,"total_sec":$totalSec%.1f,"docs_per_sec":${docsPerSec.toLong},"max_state_rows":$maxState,"final_state_rows":$lastState,"state_evicted":$totalRemoved}""")
+    require(totalRemoved > 0, "no TTL eviction observed")
+    // ~5 chunks of kept keys out of 20 at 200k rows, scaled with rows: TTL
+    // eviction must keep pace at any volume
+    val stateBound = rows * 80000L / 200000L
+    require(maxState < stateBound,
+      s"state unbounded: $maxState rows (bound $stateBound = ~5 chunks of keys at $rows rows)")
+    StreamingResult(cumulativeIn, docsPerSec, maxState, lastState, totalRemoved, stateBound)
   }
 }

@@ -134,8 +134,9 @@ object RunPipeline {
   /** The posture's dedup chain (VERDICT r6 #8): exact → url → minhash →
     * sentence → anchored ExactSubstr.
     * Each phase is a committed snapshot (resume skips it), prints one
-    * per-phase JSON metrics line (sec, rows_out, shuffle bytes — same
-    * listener as ScaleEvidence), and lands in `_metrics/posture_phases`.
+    * per-phase JSON metrics line (sec, rows_out, shuffle bytes, heap
+    * peak — the phase meter of `graft.Measure`), and lands in
+    * `_metrics/posture_phases`.
     * The chain carries the kept schema plus `doc_id` end to end; the
     * rewriting stages (sentence, exact-substr) replace `text` in place.
     * Returns the final kept table (`stage_exact_substr`). */

@@ -133,16 +133,6 @@ object StatsOps {
         avg(col(valueCol)).as("mean"),
         stddev_pop(col(valueCol)).as("std"))
 
-  /** One-pass variant of `summary` using the custom MetricStatsAgg
-    * Aggregator (one buffer instead of six — SURVEY.md §4). */
-  def summaryOnePass(df: DataFrame, valueCol: String,
-                     groupKey: Column = lit("summary")): DataFrame =
-    df.groupBy(groupKey.as("group"))
-      .agg(graft.functions.MetricStatsAgg.column(col(valueCol)).as("s"))
-      .select(col("group"), col("s.n").as("n"), col("s.total").as("total"),
-        col("s.min").as("min"), col("s.max").as("max"),
-        col("s.mean").as("mean"), col("s.std").as("std"))
-
   /** Histogram group: value rounded to 3 decimals (stats/base.py:62-87). */
   def histogram(df: DataFrame, valueCol: String): DataFrame =
     df.groupBy(round(col(valueCol), 3).as("bucket"))

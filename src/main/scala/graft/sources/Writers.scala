@@ -43,14 +43,12 @@ object Writers {
     * and nothing reads the quarantine by directory. The quarantine commits
     * first and kept last, so kept's `_SUCCESS` marks the pair committed: a
     * crash before it leaves kept uncommitted and a resumed run rewrites
-    * both. Caching the input of the two writes avoids recomputing the
-    * filter chain. */
+    * both. Each write reads `result` again, so callers pass a committed
+    * table (RunPipeline and perfbench pass the `stage_filtered` read-back),
+    * not the filter chain. */
   def withQuarantine(result: DataFrame, outPath: String, quarantinePath: String,
                      keepCol: String = "keep", reasonCol: String = "drop_reason"): Unit = {
-    val cached = result.cache()
-    try {
-      parquet(cached.where(!col(keepCol)), quarantinePath)
-      parquet(cached.where(col(keepCol)).drop(keepCol, reasonCol), outPath)
-    } finally { cached.unpersist(); () }
+    parquet(result.where(!col(keepCol)), quarantinePath)
+    parquet(result.where(col(keepCol)).drop(keepCol, reasonCol), outPath)
   }
 }

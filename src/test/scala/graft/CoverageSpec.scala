@@ -299,16 +299,6 @@ class CoverageSpec extends SparkSpec {
     assert(StatsOps.topK(grouped, "k", "n", 3).count() == 3)
   }
 
-  test("stats: one-pass MetricStatsAgg agrees with the built-in aggregate set") {
-    val df = Seq.tabulate(500)(i => (i.toLong, math.sin(i) * 10 + i % 13)).toDF("id", "v")
-      .repartition(7)
-    val a = StatsOps.summary(df, "v").collect().head
-    val b = StatsOps.summaryOnePass(df, "v").collect().head
-    assert(a.getAs[Long]("n") == b.getAs[Long]("n"))
-    for (c <- Seq("total", "min", "max", "mean", "std"))
-      assert(math.abs(a.getAs[Double](c) - b.getAs[Double](c)) < 1e-9, c)
-  }
-
   test("SqlFilters: declarative column cascade agrees with the kernel on the corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val kernelUdf = udf { t: String =>

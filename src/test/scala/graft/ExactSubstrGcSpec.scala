@@ -156,7 +156,7 @@ class ExactSubstrGcSpec extends SparkSpec {
         ExactSubstrConfig(),
         ExactSubstrConfig(shortSpanWords = Some(15)),
         ExactSubstrConfig(anchorEvery = Some(8)),
-        // the combined config is exactly what ScaleEvidence's anchored
+        // the combined config is exactly what `Measure scale`'s anchored
         // posture runs with the prefilter on — the lean h1 UDF's
         // anchored+salted multi-length path must stay property-pinned to
         // the full span UDF (ADVICE r6)

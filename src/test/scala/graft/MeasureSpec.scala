@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.plans.PhaseMetrics
 
 /** `graft.Measure`'s layers at tiny sizes on the shared test session, so
   * the measurement tool is compiled, run and checked with the engine it
@@ -75,5 +76,31 @@ class MeasureSpec extends SparkSpec {
     assert(out.select("doc_id").as[Long].collect().sorted.toSeq == docs.map(_._1))
     val cut = out.where(col("n_removed_words") > 0).select("doc_id").as[Long].collect().toSet
     assert(cut == Set(4L, 8L), "the first copy survives, later ones lose the passage")
+  }
+
+  test("phase meter: a phase holding a 64 MB array reports a heap peak of at least 64 MB") {
+    val meter = new PhaseMetrics(spark.sparkContext)
+    val (held, p) = try meter.phase("hold_64mb")(new Array[Byte](64 << 20)) finally meter.detach()
+    assert(held.length == (64 << 20))
+    assert(p.peakHeapBytes >= (64L << 20), s"peak ${p.peakHeapBytes} B")
+    assert(p.json().contains(""""peak_heap_gb":"""), p.json())
+  }
+
+  test("scale: every phase runs in order with its rows out, and ann_lsh finds the planted cliques") {
+    val r = Measure.scale(spark, 2000, Measure.ScalePhases)
+    assert(r.map(_._1) == Measure.ScalePhases)
+    assert(Measure.ScalePhases.size == 10)
+    val rowsOut = r.toMap.map { case (name, (_, out)) => name -> out }
+    assert(rowsOut("gen_corpus") == 2000)
+    assert(rowsOut("ann_lsh") > 0)
+    // gen_corpus always runs; `none` names no other phase
+    assert(Measure.scale(spark, 2000, Seq("none")).map(_._1) == Seq("gen_corpus"))
+  }
+
+  test("streaming: TTL evicts keys and the state stays under its bound") {
+    val r = Measure.streaming(spark, 2000, 1)
+    assert(r.inputRows > 0)
+    assert(r.evicted > 0)
+    assert(r.maxStateRows < r.stateBound)
   }
 }

@@ -5,7 +5,11 @@
 # resumed flags. Usage:
 #   tools/posture_crash_smoke.sh <reference_output_dir> [rows] [kill_after_phase]
 # The reference dir must hold a COMPLETED posture run at the same row count.
+# The JVM heap is SPARK_DRIVER_MEM, by default half of MemTotal clamped to
+# 2-8 GB (the test suite's sizing); the 2M posture needs more on most hosts.
 set -u
+: "${SPARK_DRIVER_MEM:=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}"
+export SPARK_DRIVER_MEM
 REF=${1:?reference output dir}
 ROWS=${2:-2000000}
 KILL_PHASE=${3:-minhash_dedup}
@@ -14,7 +18,7 @@ LOG=/tmp/posture_crash_$$.log
 rm -rf "$OUT"
 
 echo "[smoke] launching posture run to be killed after phase '$KILL_PHASE'..."
-SPARK_DRIVER_MEM=48g sbt -batch "runMain graft.RunPipeline --input synth:$ROWS --output $OUT --posture scale" > "$LOG" 2>&1 &
+sbt -batch "runMain graft.RunPipeline --input synth:$ROWS --output $OUT --posture scale" > "$LOG" 2>&1 &
 SBT_PID=$!
 # wait for the kill phase to COMMIT (its metrics line printed), then SIGKILL
 # the forked JVM mid-next-phase - between a stage commit and later writes
@@ -31,7 +35,7 @@ kill -9 "$RUNNER" 2>/dev/null
 wait $SBT_PID 2>/dev/null
 
 echo "[smoke] resuming..."
-SPARK_DRIVER_MEM=48g sbt -batch "runMain graft.RunPipeline --input synth:$ROWS --output $OUT --posture scale" > "${LOG}.resume" 2>&1
+sbt -batch "runMain graft.RunPipeline --input synth:$ROWS --output $OUT --posture scale" > "${LOG}.resume" 2>&1
 grep -E '"phase"|pipeline_done' "${LOG}.resume" | sed 's/^/[resume] /'
 
 python3 - "$REF" "$OUT" <<'EOF'
