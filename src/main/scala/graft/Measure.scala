@@ -133,12 +133,11 @@ object Measure {
       time("word_count_native", texts)(Tokenizer.wordCount),
       time("zh_segment", texts)(_ => ZhSegmenter.cut("我们今天去北京大学学习计算机")))
 
-    import GopherRepetitionFilter.{LineExp, ParaExp}
     def reps(t: String) = new FastRepetition.Reps(Tokenizer.words(t))
     val repTimes = Seq[(String, String => Any)](
       "strip" -> PyText.pyStrip,
-      "para_dups" -> (t => TextKernels.findDuplicates(ParaExp.split(PyText.pyStrip(t), -1))),
-      "line_dups" -> (t => TextKernels.findDuplicates(LineExp.split(t, -1))),
+      "para_dups" -> (t => TextKernels.findDuplicates(GopherRepetitionFilter.paragraphs(t))),
+      "line_dups" -> (t => TextKernels.findDuplicates(GopherRepetitionFilter.lines(t))),
       "preprocess_identity" -> TextKernels.repetitionPreprocessIsIdentity,
       "tokenize" -> Tokenizer.words,
       "reps_build" -> reps,
@@ -448,7 +447,7 @@ object Measure {
 
       phase("url_dedup") {
         UrlDedup(docs.withColumn("priority", col("doc_id") % 5),
-          "url", "doc_id", "priority").count()
+          "url", "doc_id", "priority").filter(!col("url_keep")).count()
       }
 
       phase("exact_substr") {

@@ -160,9 +160,12 @@ private[graft] object DupCandidates {
         .agg(min(order).as("__r"))
         .select(col("__k"), col("__c"), col("__r.id").as(repCol))
       // null-safe keys: null-confirm rows must survive the join (a plain
-      // === would silently drop them)
-      rows.join(reps, rows("__k") <=> reps("__k") && rows(confirmCol) <=> reps("__c"))
-        .drop(reps("__k")).drop("__c")
+      // === would silently drop them). reps derives from rows, so both
+      // sides are aliased: rows("__k") <=> reps("__k") names one attribute
+      // twice, a trivially true predicate Spark warns about.
+      rows.as("__rows").join(reps.as("__reps"),
+          col("__rows.__k") <=> col("__reps.__k") && col(s"__rows.`$confirmCol`") <=> col("__reps.__c"))
+        .select(col("__rows.*"), col(s"__reps.`$repCol`"))
     }
     val annotated = guardedDupKeys(keyed.select("__k"), Seq("__k"), s"firstwins.$repCol")
       .keys match {

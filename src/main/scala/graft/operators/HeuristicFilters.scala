@@ -142,9 +142,10 @@ final case class GopherRepetitionConfig(
       Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10))
 
 object GopherRepetitionFilter {
-  // Python re.split keeps leading/trailing empty fields → Java split limit -1
-  private[graft] val ParaExp = Pattern.compile("\n{2,}")
-  private[graft] val LineExp = Pattern.compile("\n+")
+  /** The reference's re.split on "\n{2,}" (paragraphs) and "\n+" (lines). */
+  private[graft] def paragraphs(text: String): Array[String] =
+    TextKernels.splitNewlineRuns(PyText.pyStrip(text), 2)
+  private[graft] def lines(text: String): Array[String] = TextKernels.splitNewlineRuns(text, 1)
 
   /** The fork's data_cleaning.py:146 relaxed dup-n-gram thresholds. */
   val ForkDupNGrams: Seq[(Int, Double)] =
@@ -152,16 +153,16 @@ object GopherRepetitionFilter {
 
   def check(text: String, cfg: GopherRepetitionConfig = GopherRepetitionConfig(),
             tokenize: String => Array[String] = Tokenizer.words): Option[String] = {
-    val paragraphs = ParaExp.split(PyText.pyStrip(text), -1)
-    val (paraDup, paraDupChars) = TextKernels.findDuplicates(paragraphs)
-    if (cfg.dupParaFrac.exists(f => paraDup.toDouble / paragraphs.length > f))
+    val paras = paragraphs(text)
+    val (paraDup, paraDupChars) = TextKernels.findDuplicates(paras)
+    if (cfg.dupParaFrac.exists(f => paraDup.toDouble / paras.length > f))
       return Some("dup_para_frac")
     if (cfg.dupParaCharFrac.exists(f => paraDupChars.toDouble / text.length > f))
       return Some("dup_para_char_frac")
 
-    val lines = LineExp.split(text, -1)
-    val (lineDup, lineDupChars) = TextKernels.findDuplicates(lines)
-    if (cfg.dupLineFrac.exists(f => lineDup.toDouble / lines.length > f))
+    val ls = lines(text)
+    val (lineDup, lineDupChars) = TextKernels.findDuplicates(ls)
+    if (cfg.dupLineFrac.exists(f => lineDup.toDouble / ls.length > f))
       return Some("dup_line_frac")
     if (cfg.dupLineCharFrac.exists(f => lineDupChars.toDouble / text.length > f))
       return Some("dup_line_char_frac")

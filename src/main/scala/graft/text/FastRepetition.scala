@@ -114,7 +114,7 @@ object FastRepetition {
     }
   }
 
-  private val arena: ThreadLocal[PairArena] =
+  private val arenas: ThreadLocal[PairArena] =
     ThreadLocal.withInitial(() => new PairArena)
 
   @inline private def mix(a: Long, b: Long): Int = {
@@ -140,6 +140,10 @@ object FastRepetition {
     *                        = P(j) − P(i)·pow(j)·ipow(i). */
   final class Reps(words: Array[String]) {
     val nWords: Int = words.length
+    // one thread-local lookup per text, not one per pass: in a Spark task
+    // thread the lookup probes a crowded ThreadLocalMap. A Reps therefore
+    // belongs to the thread that built it.
+    private val arena = arenas.get()
     // unspaced-concat prefixes + char-length powers
     private val pU1 = new Array[Long](nWords + 1)
     private val pU2 = new Array[Long](nWords + 1)
@@ -197,12 +201,11 @@ object FastRepetition {
     def findAllDuplicate(n: Int): Int = {
       val limit = nWords - n + 1
       if (limit <= 0) return 0
-      val seen = arena.get()
-      seen.begin(limit)
+      arena.begin(limit)
       var repeatedChars = 0
       var idx = 0
       while (idx < limit) {
-        if (!seen.add(hU1(idx, idx + n), hU2(idx, idx + n))) {
+        if (!arena.add(hU1(idx, idx + n), hU2(idx, idx + n))) {
           repeatedChars += lenU(idx + n) - lenU(idx)
           idx += n
         } else idx += 1
@@ -215,8 +218,7 @@ object FastRepetition {
     def findTopDuplicate(n: Int): Int = {
       val limit = nWords - n + 1
       if (limit <= 0) return 0
-      val counter = arena.get()
-      counter.begin(limit)
+      arena.begin(limit)
       val bn1 = bPow1(n) // B^(#separators in the window span)
       val bn2 = bPow2(n)
       var idx = 0
@@ -228,10 +230,10 @@ object FastRepetition {
         val h1 = (hs1 - ' '.toLong) * InvB1
         val h2 = (hs2 - ' '.toLong) * InvB2
         val charLen = lenU(j) - lenU(idx) + (n - 1)
-        counter.addOcc(h1, h2, charLen)
+        arena.addOcc(h1, h2, charLen)
         idx += 1
       }
-      counter.topProduct
+      arena.topProduct
     }
   }
 }

@@ -276,6 +276,25 @@ object TextKernels {
     (dupElems, dupChars)
   }
 
+  /** `Pattern.compile(s"\n{$minRun,}").split(s, -1)` without the regex:
+    * every run of at least `minRun` newlines is one separator, a shorter
+    * run stays inside its field, and leading and trailing empty fields are
+    * kept (Python's re.split). Pinned against Pattern.split by
+    * TextKernelsSpec. */
+  def splitNewlineRuns(s: String, minRun: Int): Array[String] = {
+    val out = new mutable.ArrayBuffer[String]()
+    var start = 0
+    var i = s.indexOf('\n')
+    while (i >= 0) {
+      var j = i + 1
+      while (j < s.length && s.charAt(j) == '\n') j += 1
+      if (j - i >= minRun) { out += s.substring(start, i); start = j }
+      i = s.indexOf('\n', j)
+    }
+    out += s.substring(start)
+    out.toArray
+  }
+
   /** find_top_duplicate (gopher_repetition_filter.py:49-54):
     * len(most common n-gram) * its count; Counter.most_common tie-break is
     * first-insertion order. Returns 0 for empty input (caller guards). */

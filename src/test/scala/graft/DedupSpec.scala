@@ -177,6 +177,41 @@ in culpa qui officia deserunt mollit anim id est laborum""".replace("\n", " ")
     assert(out == Map(1L -> false, 2L -> true, 3L -> false, 4L -> true))
   }
 
+  test("exact and url dedup build no trivially true join predicate") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // the first-wins join-back joins rows with a frame derived from them;
+    // unaliased, rows("__k") <=> reps("__k") names one attribute twice
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("triviallyTrue", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+            e.getMessage.getFormattedMessage.contains("trivially true"))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    spark.sparkContext.setLogLevel("WARN")
+    try {
+      val texts = Seq((10L, "aaa"), (3L, "aaa"), (5L, "bbb"), (7L, null)).toDF("doc_id", "text")
+      val exact = ExactDedup(texts, "doc_id", "text").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("exact_keep")).toMap
+      assert(exact == Map(10L -> false, 3L -> true, 5L -> true, 7L -> true))
+      val urls = Seq(("u1", 1L, 1), ("u1", 2L, 3), ("u2", 4L, 0)).toDF("url", "doc_id", "priority")
+      val url = UrlDedup(urls, "url", "doc_id", "priority").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("url_keep")).toMap
+      assert(url == Map(1L -> false, 2L -> true, 4L -> true))
+    } finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warnings.isEmpty, s"Spark warned: $warnings")
+  }
+
   test("url dedup with normalization unifies scheme/query/case variants") {
     assert(UrlDedup.normalizeUrl("https://Ex.COM/a/b?q=1#f") == "ex.com/a/b")
     assert(UrlDedup.normalizeUrl("http://ex.com/a/b/") == "ex.com/a/b")

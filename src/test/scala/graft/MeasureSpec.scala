@@ -93,6 +93,11 @@ class MeasureSpec extends SparkSpec {
     val rowsOut = r.toMap.map { case (name, (_, out)) => name -> out }
     assert(rowsOut("gen_corpus") == 2000)
     assert(rowsOut("ann_lsh") > 0)
+    // url_dedup counts the rows it drops, like the other dedup phases: the
+    // generator gives every page its own url, so it drops none
+    val urls = spark.read.parquet(Bench.ensureCorpus(spark, 2000)).select("url")
+    assert(urls.distinct().count() == 2000)
+    assert(rowsOut("url_dedup") == 0)
     // gen_corpus always runs; `none` names no other phase
     assert(Measure.scale(spark, 2000, Seq("none")).map(_._1) == Seq("gen_corpus"))
   }

@@ -167,4 +167,19 @@ class TextKernelsSpec extends AnyFunSuite {
         s"divergence on trial $trial: ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
     }
   }
+
+  test("splitNewlineRuns equals Pattern.split(-1) on random newline-heavy strings, minRun 1 and 2") {
+    val rng = new scala.util.Random(15)
+    val alphabet = "\n\n\n\na\r b"
+    for (minRun <- Seq(1, 2)) {
+      val exp = java.util.regex.Pattern.compile(s"\n{$minRun,}")
+      for (_ <- 1 to 200000) {
+        val s = Seq.fill(rng.nextInt(14))(alphabet.charAt(rng.nextInt(alphabet.length))).mkString
+        val got = TextKernels.splitNewlineRuns(s, minRun).toSeq
+        assert(got == exp.split(s, -1).toSeq, s"minRun $minRun on ${s.map(_.toInt)}")
+      }
+    }
+    assert(TextKernels.splitNewlineRuns("", 2).toSeq == Seq(""))
+    assert(TextKernels.splitNewlineRuns("\n\na\nb\n\n\n", 2).toSeq == Seq("", "a\nb", ""))
+  }
 }
