@@ -1,8 +1,12 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -18,9 +22,15 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Registered for the `file:` scheme by `fs.file.impl` in the
   * `core-site.xml` on graft's classpath, so it reaches every session
-  * without a conf or flag. Under `spark-submit`, a cluster's
-  * `HADOOP_CONF_DIR/core-site.xml` comes first on the classpath and wins:
-  * such a deployment gets stock Hadoop behaviour. Without the property,
+  * without a conf or flag. Hadoop reads only the first `core-site.xml` on
+  * the classpath and ignores the rest whole, in both directions. Under
+  * `spark-submit`, a cluster's `HADOOP_CONF_DIR/core-site.xml` comes first
+  * and wins: such a deployment gets stock Hadoop behaviour. Where graft's
+  * classes come first instead (`java -cp graft.jar:$HADOOP_CONF_DIR`,
+  * `spark.{driver,executor}.userClassPathFirst`, graft used as a library),
+  * graft's file shadows the site config and its `fs.defaultFS`, credentials
+  * and the rest are lost; [[NioLocalFileSystem]] then logs a warning naming
+  * the ignored files. Without the property,
   * Hadoop picks the last `file` class its service loader lists, which on
   * Spark's jars is hive-exec's `ProxyLocalFileSystem`: a LocalFileSystem
   * whose `rename` refuses to replace an existing file. graft renames
@@ -47,5 +57,30 @@ object NioRawLocalFileSystem {
 }
 
 /** The checksummed local file system over [[NioRawLocalFileSystem]]: `.crc`
-  * sidecars are still written and verified (DsCheck relies on them). */
-class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+  * sidecars are still written and verified (DsCheck relies on them). On its
+  * first use with a class loader it warns if that loader sees more than one
+  * `core-site.xml`: all but the first are ignored by Hadoop. */
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    super.initialize(name, conf)
+    val loader = conf.getClassLoader
+    if (loader != null && NioLocalFileSystem.checked.add(loader))
+      NioLocalFileSystem.shadowWarning(loader).foreach(NioLocalFileSystem.log.warn)
+  }
+}
+
+object NioLocalFileSystem {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[NioLocalFileSystem])
+  private val checked = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[ClassLoader, java.lang.Boolean]))
+
+  /** Hadoop's `Configuration` loads `core-site.xml` with `getResource`: the
+    * first one the loader finds. Names every later one, which is ignored. */
+  def shadowWarning(loader: ClassLoader): Option[String] =
+    loader.getResources("core-site.xml").asScala.toSeq match {
+      case read +: ignored if ignored.nonEmpty =>
+        Some(s"Hadoop reads only the first core-site.xml on the classpath, $read; " +
+          s"ignored whole: ${ignored.mkString(", ")}")
+      case _ => None
+    }
+}

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
@@ -95,5 +96,41 @@ class LocalFsSpec extends SparkSpec {
     try assert(new String(in.readAllBytes(), "UTF-8") == "graft") finally in.close()
     (0 until 10).toDF("id").write.parquet(dir.resolve("pq").toString)
     assert(Files.list(dir.resolve("pq")).iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet.crc")))
+  }
+
+  test("a core-site.xml shadowed by graft's is named in a warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // the test classpath holds graft's core-site.xml and no other
+    assert(NioLocalFileSystem.shadowWarning(getClass.getClassLoader).isEmpty)
+    // graft's classes before a site config dir, as `-cp graft.jar:$HADOOP_CONF_DIR`
+    val site = Files.createTempDirectory("localfs_site")
+    Files.writeString(site.resolve("core-site.xml"), "<configuration/>")
+    val loader = new java.net.URLClassLoader(Array(site.toUri.toURL), getClass.getClassLoader)
+    val expected = NioLocalFileSystem.shadowWarning(loader)
+    assert(expected.exists(_.endsWith(s"ignored whole: ${site.resolve("core-site.xml").toUri.toURL}")), expected)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("shadowedSite", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == classOf[NioLocalFileSystem].getName && e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    spark.sparkContext.setLogLevel("WARN")
+    try {
+      val shadowed = new Configuration(conf)
+      shadowed.setClassLoader(loader)
+      // warned once per class loader
+      for (_ <- 0 until 2) new NioLocalFileSystem().initialize(new URI("file:///"), shadowed)
+    } finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warnings.asScala.toSeq == expected.toSeq)
   }
 }

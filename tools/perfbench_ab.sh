@@ -5,16 +5,16 @@
 #   tools/perfbench_ab.sh <git-ref> <workload> <pairs> [first-seed]
 #
 # Exports <git-ref> with `git archive` to $AB_DIR/base and copies the
-# working tree (tracked and untracked, not ignored) to $AB_DIR/head. Pair i
-# runs `python3 perfbench/run.py --workload <workload> --seed <first-seed+i>
-# --seconds $AB_SECONDS` (default 10) once in each checkout; odd pairs run
-# base first, even pairs head first, so drift over the session lands on
-# both sides. Each checkout builds once, into its own .bench_build, on its
-# first run. Prints one line per pair and, per end-to-end metric
-# (docs_per_s, cpu_s_per_kdoc, setup_s), both medians, the base runs'
-# interquartile range and the pairs the head won; every run's JSON line is
-# kept in $AB_DIR/results.jsonl. AB_DIR defaults to a new temp directory,
-# first-seed to 42.
+# working tree (tracked and untracked, not ignored; deleted files left out)
+# to $AB_DIR/head. Pair i runs `python3 perfbench/run.py --workload
+# <workload> --seed <first-seed+i> --seconds 10` once in each checkout;
+# even pairs (from 0) run base first, odd pairs head first, so drift over
+# the session lands on both sides. Each checkout builds once, into its own
+# .bench_build, on its first run. Prints one line per pair and, per
+# end-to-end metric (docs_per_s, cpu_s_per_kdoc, setup_s), both medians,
+# the base runs' interquartile range and the pairs the head won; every
+# run's JSON line is kept in $AB_DIR/results.jsonl. AB_DIR defaults to a
+# new temp directory, first-seed to 42.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -24,18 +24,22 @@ fi
 ref=$1 workload=$2 pairs=$3 seed0=${4:-42}
 repo=$(git rev-parse --show-toplevel)
 dir=${AB_DIR:-$(mktemp -d -t perfbench_ab.XXXXXX)}
-seconds=${AB_SECONDS:-10}
 mkdir -p "$dir/base" "$dir/head"
 git -C "$repo" archive "$ref" | tar -x -C "$dir/base"
-(cd "$repo" && git ls-files -z -co --exclude-standard | tar -c --null -T -) | tar -x -C "$dir/head"
+# tracked files deleted in the working tree are still listed: skip them
+(cd "$repo" && git ls-files -z -co --exclude-standard |
+  while IFS= read -r -d '' f; do
+    if [ -e "$f" ] || [ -L "$f" ]; then printf '%s\0' "$f"; fi
+  done | tar -c --null -T -) | tar -x -C "$dir/head"
 results=$dir/results.jsonl
 : > "$results"
 echo "perfbench_ab: base=$ref head=working tree workload=$workload pairs=$pairs dir=$dir" >&2
 
 run() { # side seed pair
   local line
+  # 10 s is perfbench's documented run length (run.py's usage line)
   line=$(cd "$dir/$1" && env -u CARGO_TARGET_DIR python3 perfbench/run.py \
-    --workload "$workload" --seed "$2" --seconds "$seconds" | tail -n 1)
+    --workload "$workload" --seed "$2" --seconds 10 | tail -n 1)
   printf '{"side":"%s","seed":%s,"pair":%s,"run":%s}\n' "$1" "$2" "$3" "$line" >> "$results"
 }
 
