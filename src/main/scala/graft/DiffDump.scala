@@ -18,17 +18,12 @@ import graft.sources.WebCorpusGen
   * assets, unavailable offline — documented in BENCH.md).
   */
 object DiffDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_diff"
-    val nDocs = if (args.length > 1) args(1).toLong else 4000L
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[1]")
-      .config("spark.sql.shuffle.partitions", 1)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val corpus = WebCorpusGen.generate(spark, nDocs, partitions = 1)
+  /** Writes `rows` corpus docs to `outDir/corpus` and their verdicts to
+    * `outDir/result`, each one file in doc order. */
+  def dump(spark: SparkSession, outDir: String, rows: Int): Unit = {
+    // one partition on any master: the narrow chain keeps it, so the PII
+    // rotation sees every doc in id order
+    val corpus = WebCorpusGen.generate(spark, rows, partitions = 1)
       .select(col("url"), col("warc_ts"), col("text"), col("lang"))
 
     // the harness input: original (pre-rewrite) text in doc order
@@ -47,7 +42,7 @@ object DiffDump {
         failOnMissingLanguage = false, defaultLanguage = "en"),
       Stages.piiFormatter)
 
-    val result = new QualityPipeline(stages).run(corpus)
+    val result = new QualityPipeline(stages).run(corpus)(spark)
     // minhash-input parity columns: cc-normalized text + the first 5-gram
     // shingle hash (sha1_hash64 of the space-joined words of simplify_text)
     val simplifyUdf = udf { t: String => graft.text.TextKernels.simplifyText(t) }
@@ -63,6 +58,5 @@ object DiffDump {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/result")
     println(s"DIFF_DUMP_OK $outDir")
-    spark.stop()
   }
 }

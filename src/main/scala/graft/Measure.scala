@@ -18,6 +18,7 @@ import graft.text.{FastRepetition, PyText, TextKernels, Tokenizer, ZhSegmenter}
   *   sbt -batch "runMain graft.Measure exact-substr /tmp/es_corpus.jsonl /tmp/es_out"
   *   sbt -batch "runMain graft.Measure scale 2000000 ann_lsh"
   *   sbt -batch "runMain graft.Measure streaming 200000 1 rocksdb"
+  *   sbt -batch "runMain graft.Measure diff web /tmp/graft_diff"
   *
   * Every Spark layer runs on Bench's session conf with [[cpus]] cores and
   * is a function of a `SparkSession`, so a spec can call it; Spark phases
@@ -36,7 +37,8 @@ object Measure {
       |  scaling [rows]
       |  exact-substr <in.jsonl> <out> [shortSpanWords] [anchorEvery]
       |  scale [rows] [phase,...|all|none]
-      |  streaming [rows] [filesPerTrigger] [hdfs|rocksdb]""".stripMargin
+      |  streaming [rows] [filesPerTrigger] [hdfs|rocksdb]
+      |  diff <web|zh|syn> [outDir] [rows]""".stripMargin
 
   /** SPARK_GRAFT_CPUS, else every processor this JVM sees. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -83,6 +85,8 @@ object Measure {
           "spark.sql.files.maxPartitionBytes" -> (2 * 1024 * 1024).toString)(scale(_, num(0, 2000000), phases))
       case ("streaming", _) =>
         withSession()(streaming(_, num(0, 200000), num(1, 1).toInt, rest.lift(2).getOrElse("hdfs")))
+      case ("diff", kind :: opt) if DiffDirs.contains(kind) =>
+        withSession()(diff(_, kind, opt.headOption.getOrElse(DiffDirs(kind)), num(2, 4000).toInt))
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
@@ -615,5 +619,22 @@ object Measure {
     require(maxState < stateBound,
       s"state unbounded: $maxState rows (bound $stateBound = ~5 chunks of keys at $rows rows)")
     StreamingResult(cumulativeIn, docsPerSec, maxState, lastState, totalRemoved, stateBound)
+  }
+
+  // ---- diff --------------------------------------------------------------
+
+  /** Default output directory per `diff` kind. */
+  private val DiffDirs: Map[String, String] = Map(
+    "web" -> "/tmp/graft_diff", "zh" -> "/tmp/graft_zh_diff", "syn" -> "/tmp/graft_syn_diff")
+
+  /** The input of one differential harness: `web` writes `corpus/` and
+    * `result/` ([[DiffDump]], for tools/diff_harness.py), `zh` writes `zh/`
+    * ([[ZhDiffDump]], tools/zh_diff.py), `syn` writes `split/` and `calc/`
+    * ([[SynDiffDump]], tools/syn_diff.py). Each is a function of `rows`
+    * alone, not of the session's core count. */
+  def diff(spark: SparkSession, kind: String, outDir: String, rows: Int): Unit = kind match {
+    case "web" => DiffDump.dump(spark, outDir, rows)
+    case "zh" => ZhDiffDump.dump(spark, outDir, rows)
+    case "syn" => SynDiffDump.dump(spark, outDir, rows)
   }
 }

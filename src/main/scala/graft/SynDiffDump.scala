@@ -74,26 +74,20 @@ object SynDiffDump {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "/tmp/graft_syn_diff"
-    val n = if (args.length > 1) args(1).toInt else 4000
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("syn-diff-dump")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Writes `rows` splitter cases to `out/split` and calculator cases to
+    * `out/calc`. */
+  def dump(spark: SparkSession, out: String, rows: Int): Unit = {
     import spark.implicits._
 
     // splitter surface: text -> engine's sentence list
-    (0L until n.toLong).map { id =>
+    (0L until rows.toLong).map { id =>
       val t = genText(id)
       (id, t, SC.splitIntoSentences(t, 128, SC.ZhEosPuncts))
     }.toDF("id", "text", "sents")
       .write.mode("overwrite").parquet(s"$out/split")
 
     // calculator surface: random trees -> quantized metrics
-    (0L until n.toLong).map { id =>
+    (0L until rows.toLong).map { id =>
       val ss = genTrees(id)
       val m = SC.compute(ss)
       (id, ss.map(_.depLabels), ss.map(_.parents),
@@ -103,7 +97,6 @@ object SynDiffDump {
     }.toDF("id", "labels", "parents", "q_ent", "q_height", "q_dis")
       .write.mode("overwrite").parquet(s"$out/calc")
 
-    println(s"syn diff dump: $n docs -> $out")
-    spark.stop()
+    println(s"syn diff dump: $rows docs -> $out")
   }
 }

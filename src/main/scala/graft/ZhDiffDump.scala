@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.SplitMix64
 import graft.operators.{GopherQualityConfig, GopherQualityFilter, GopherRepetitionFilter}
 import graft.text.ZhSegmenter
 
@@ -36,15 +37,8 @@ object ZhDiffDump {
     val words = ZhSegmenter.freq.filter(_._2 > 0).keys.toSeq.sorted
     val nonStop = words.filterNot(StopWordsZh)
     (0 until n).map { id =>
-      var s = id.toLong * 0x9e3779b97f4a7c15L + 0x1234567L
-      def next(): Long = {
-        s += 0x9e3779b97f4a7c15L
-        var z = s
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        z ^ (z >>> 31)
-      }
-      val len = 4 + java.lang.Math.floorMod(next(), 42L).toInt
+      val rng = new SplitMix64(id.toLong * 0x9e3779b97f4a7c15L + 0x1234567L)
+      val len = 4 + java.lang.Math.floorMod(rng.nextLong(), 42L).toInt
       val pool = if (id % 7 == 0) nonStop else words
       val sb = new StringBuilder
       var k = 0
@@ -61,15 +55,15 @@ object ZhDiffDump {
         // dict tokens (measured share 13.0% at 10%), so the share stays in
         // the ≤12% dictionary-dominated band while every few docs still
         // exercise the unknown-word HMM.
-        if (java.lang.Math.floorMod(next(), 100L) < 9L) {
-          val runLen = 2 + java.lang.Math.floorMod(next(), 3L).toInt
+        if (java.lang.Math.floorMod(rng.nextLong(), 100L) < 9L) {
+          val runLen = 2 + java.lang.Math.floorMod(rng.nextLong(), 3L).toInt
           var j = 0
           while (j < runLen) {
-            sb.append(OovChars(java.lang.Math.floorMod(next(), OovChars.length.toLong).toInt))
+            sb.append(OovChars(java.lang.Math.floorMod(rng.nextLong(), OovChars.length.toLong).toInt))
             j += 1
           }
         } else {
-          sb.append(pool(java.lang.Math.floorMod(next(), pool.length.toLong).toInt))
+          sb.append(pool(java.lang.Math.floorMod(rng.nextLong(), pool.length.toLong).toInt))
         }
         if (k % 8 == 7) sb.append('。')
         if (id % 11 == 0 && k % 5 == 4) sb.append('#')
@@ -79,28 +73,21 @@ object ZhDiffDump {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_zh_diff"
-    val nDocs = if (args.length > 1) args(1).toInt else 4000
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Writes `rows` generated docs with both Gopher verdicts to `outDir/zh`. */
+  def dump(spark: SparkSession, outDir: String, rows: Int): Unit = {
     import spark.implicits._
-
     val qualUdf = udf { t: String =>
       GopherQualityFilter.check(t, ZhGopherConfig).getOrElse("")
     }
     val repUdf = udf { t: String =>
       GopherRepetitionFilter.check(t).getOrElse("")
     }
-    genCorpus(nDocs).toDF("doc_id", "text")
+    genCorpus(rows).toDF("doc_id", "text")
       .select(col("doc_id"), col("text"),
         qualUdf(col("text")).as("reason_quality"),
         repUdf(col("text")).as("reason_repetition"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/zh")
     println(s"[zh-diff] wrote $outDir/zh")
-    spark.stop()
   }
 }

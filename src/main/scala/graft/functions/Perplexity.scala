@@ -152,10 +152,6 @@ object ArpaModel {
     new ArpaModel(maps, maxOrder)
   }
 
-  def parseFile(path: String): ArpaModel =
-    parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
-
   /** Parse a classpath resource (e.g. the committed /graft/tiny.arpa test
     * fixture — a self-authored toy bigram model). */
   def parseResource(name: String): ArpaModel =

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Hashes
 import graft.text.{PyText, TextKernels, Tokenizer}
@@ -437,7 +436,4 @@ object NgramJaccard {
     if (sa.isEmpty && sb.isEmpty) 0.0
     else sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
-
-  def jaccardUdf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: String, b: String) => jaccard(a, b, n) }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.Hashes
+import graft.functions.{Hashes, SplitMix64}
 import graft.text.{TextKernels, Tokenizer}
 
 /** MinHash + LSH near-duplicate detection, re-expressed Spark-first.
@@ -43,16 +43,9 @@ object MinhashDedup {
     * observable, similarity properties are, and those are tested.) */
   def parameters(cfg: MinhashDedupConfig): (Array[Long], Array[Long]) = {
     val n = cfg.numBuckets * cfg.hashesPerBucket
-    var s = cfg.seed
-    def next(): Long = {
-      s += 0x9e3779b97f4a7c15L
-      var z = s
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val a = Array.fill(n)(java.lang.Long.remainderUnsigned(next(), MersennePrime - 1) + 1)
-    val b = Array.fill(n)(java.lang.Long.remainderUnsigned(next(), MersennePrime))
+    val rng = new SplitMix64(cfg.seed)
+    val a = Array.fill(n)(java.lang.Long.remainderUnsigned(rng.nextLong(), MersennePrime - 1) + 1)
+    val b = Array.fill(n)(java.lang.Long.remainderUnsigned(rng.nextLong(), MersennePrime))
     (a, b)
   }
 
@@ -241,11 +234,6 @@ object MinhashDedup {
       .distinct()
   }
 
-  /** Connected components: iterative min-label propagation to fixpoint.
-    * Each round every node takes the min label over itself + its neighbors
-    * (labels flow both ways along edges), then one pointer-jumping step
-    * (follow your label's label) halves the remaining distance — so rounds
-    * ≈ log2(component diameter). Returns (doc, cluster). */
   /** Driver-side union-find (path compression + union by size — the exact
     * algorithm of the reference's single-worker stage 3, minhash.py:487-508)
     * with min-id cluster labels. Used when the edge set fits comfortably on
@@ -273,7 +261,15 @@ object MinhashDedup {
     nodes.map(n => (n, find(n))).toSeq.toDF("doc", "cluster")
   }
 
-  /** `driverEdgeLimit < 0` (the default) reads
+  /** Connected components, labelled by min id: `driverComponents` for
+    * at most `driverEdgeLimit` long-id edges, else iterative min-label
+    * propagation to fixpoint. Each round every node takes the min label
+    * over itself + its neighbors (labels flow both ways along edges), then
+    * one pointer-jumping step (follow your label's label) halves the
+    * remaining distance — so rounds ≈ log2(component diameter). Returns
+    * (doc, cluster).
+    *
+    * `driverEdgeLimit < 0` (the default) reads
     * `spark.graft.uf.driverEdgeLimit` (default 5×10^6) — conf-settable so
     * harnesses and tests can route real corpora through the DISTRIBUTED
     * label-propagation path without touching call sites; the two paths are

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.SplitMix64
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -293,20 +294,10 @@ object Similarity {
 
   /** Deterministic pseudo-random unit-free hyperplanes from a seed. */
   private[graft] def hyperplanes(dim: Int, bits: Int, seed: Long): Array[Array[Double]] = {
-    var s = seed
-    def next(): Long = {
-      s += 0x9e3779b97f4a7c15L
-      var z = s
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
+    val rng = new SplitMix64(seed)
     // Box-Muller-free: sum of 4 uniforms ≈ gaussian enough for LSH planes
     Array.fill(bits, dim) {
-      ((next() >>> 11) * 1.1102230246251565e-16) +
-      ((next() >>> 11) * 1.1102230246251565e-16) +
-      ((next() >>> 11) * 1.1102230246251565e-16) +
-      ((next() >>> 11) * 1.1102230246251565e-16) - 2.0
+      rng.nextDouble() + rng.nextDouble() + rng.nextDouble() + rng.nextDouble() - 2.0
     }
   }
 

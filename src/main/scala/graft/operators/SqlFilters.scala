@@ -57,34 +57,4 @@ object SqlFilters {
       .when(stops < minStopWords, "gopher_enough_stop_words")
       .otherwise("")
   }
-
-  /** FineWeb quality rules as columns (fineweb_quality_filter.py order).
-    * Terminal punctuation restricted to the ASCII subset for a codegen-able
-    * endswith cascade; the kernel path carries the full 159-mark table. */
-  def fineWebQualityReason(
-      text: Column,
-      shortLineLength: Int = 30): Column = {
-    val lines = filter(split(text, "\n"), l => trim(l) =!= "")
-    val nLines = size(lines)
-    val punctLines = size(filter(lines, l =>
-      l.endsWith(".") || l.endsWith("!") || l.endsWith("?") || l.endsWith("…")))
-    val shortLines = size(filter(lines, l => length(l) <= shortLineLength))
-    // find_duplicates char count = total line chars − first-occurrence
-    // chars; array_distinct keeps first occurrences, so the difference is
-    // exactly the re-occurring lines' char mass
-    val allLines = split(text, "\n")
-    val lineChars = aggregate(transform(allLines, l => length(l)), lit(0L), (a, x) => a + x)
-    val distinctChars = aggregate(transform(array_distinct(allLines), l => length(l)),
-      lit(0L), (a, x) => a + x)
-    val dupChars = lineChars - distinctChars
-    val ws = words(regexp_replace(text, "\n", " "))
-    val newlines = (length(text) - length(regexp_replace(text, "\n", ""))).cast("long")
-    val denom = length(text).cast("long") - newlines
-    when(nLines === 0, "empty")
-      .when(punctLines * 100 < nLines * 12, "line_punct_ratio")
-      .when(shortLines * 100 > nLines * 67, "short_line_ratio")
-      .when(dupChars * 100 > denom, "char_dup_ratio")
-      .when(newlines * 10 > size(ws).cast("long") * 3, "list_ratio")
-      .otherwise("")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.{Punct, PyText, TextKernels, Tokenizer}
 
@@ -143,19 +142,4 @@ object StatsOps {
     * stats/config.py:24) with a deterministic tie-break. */
   def topK(grouped: DataFrame, keyCol: String, nCol: String, k: Int): DataFrame =
     grouped.orderBy(desc(nCol), asc(keyCol)).limit(k)
-
-  /** Skew-aware distinct-count per key (hot domains — the north rule calls
-    * skew out explicitly; the reference has no mitigation, SURVEY.md §4).
-    *
-    * Plain count/sum/min/max per fqdn need NO salting: Spark's map-side
-    * partial aggregation bounds the shuffle to one row per key per mapper.
-    * The aggregations that DO melt a reducer under a hot key are the ones
-    * without partial pushdown — countDistinct / collect_list. This runs
-    * distinct-count as two phases: dedupe on the composite (key, value)
-    * (the varying value spreads the hot key across reducers — implicit
-    * salting), then count per key, where partial aggregation applies. */
-  def distinctCountSkewAware(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    df.select(col(keyCol), col(valueCol)).distinct()
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n_distinct"))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.WebPage
+import graft.functions.SplitMix64
 
 /** Deterministic synthetic Common-Crawl-style corpus matching the
   * BASELINE.json input_hint schema (url, warc_ts, html, text, lang).
@@ -76,24 +77,9 @@ object WebCorpusGen {
     "los", "barcos", "en", "el", "río", "cerca", "del", "puente", "con",
     "una", "luz", "suave", "no", "pero", "también", "muy", "cuando", "es")
 
-  final class DocRng(seed: Long) {
-    private var s: Long = seed ^ 0x9e3779b97f4a7c15L
-    def nextLong(): Long = {
-      s += 0x9e3779b97f4a7c15L
-      var z = s
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    def nextInt(bound: Int): Int = {
-      val l = nextLong() & Long.MaxValue
-      (l % bound).toInt
-    }
-    def nextDouble(): Double = (nextLong() >>> 11) * 1.1102230246251565e-16
-    def pick(a: Array[String]): String = a(nextInt(a.length))
-  }
+  private def docRng(seed: Long): SplitMix64 = new SplitMix64(seed ^ 0x9e3779b97f4a7c15L)
 
-  private def sentence(rng: DocRng): String = {
+  private def sentence(rng: SplitMix64): String = {
     val a = () => rng.pick(adjectives)
     val o = () => rng.pick(nouns)
     val v = () => rng.pick(verbs)
@@ -115,15 +101,15 @@ object WebCorpusGen {
     core + tail + ". "
   }
 
-  private def paragraph(rng: DocRng, sentences: Int): String =
+  private def paragraph(rng: SplitMix64, sentences: Int): String =
     (1 to sentences).map(_ => sentence(rng)).mkString("").trim
 
-  private def cleanDoc(rng: DocRng, scale: Int): String = {
+  private def cleanDoc(rng: SplitMix64, scale: Int): String = {
     val nParas = 3 + rng.nextInt(3 + scale)
     (1 to nParas).map(_ => paragraph(rng, 2 + rng.nextInt(4))).mkString("\n")
   }
 
-  private def foreignDoc(rng: DocRng, words: Array[String]): String = {
+  private def foreignDoc(rng: SplitMix64, words: Array[String]): String = {
     val n = 60 + rng.nextInt(80)
     val sb = new StringBuilder
     var i = 0
@@ -135,7 +121,7 @@ object WebCorpusGen {
     sb.append(words(rng.nextInt(words.length))).append('.').toString
   }
 
-  private def zhDoc(rng: DocRng): String = {
+  private def zhDoc(rng: SplitMix64): String = {
     val chars = "的一是在不了有和人这中大为上个国我以要他时来用们生到作地于出就分对成会可主发年动"
     val n = 80 + rng.nextInt(120)
     val sb = new StringBuilder
@@ -146,7 +132,7 @@ object WebCorpusGen {
 
   /** doc kind by id hash: 0-59 clean, then planted rule triggers. */
   def genText(id: Long, seed: Long): (String, String) = { // (text, lang)
-    val rng = new DocRng(seed ^ (id * 0x5851f42d4c957f2dL))
+    val rng = docRng(seed ^ (id * 0x5851f42d4c957f2dL))
     val kind = (id % 100).toInt
     kind match {
       case k if k < 60 => (cleanDoc(rng, if (k % 7 == 0) 6 else 2), "en")
@@ -240,13 +226,13 @@ object WebCorpusGen {
   val BlockedDomains: Set[String] = (0 until 500 by 50).map(i => domains(i)).toSet
 
   def genRow(id: Long, seed: Long): WebPage = {
-    val rng = new DocRng(seed ^ id)
+    val rng = docRng(seed ^ id)
     val (text0, lang) = genText(id, seed)
     // 0.1% oversized blobs (~50x median): extra *distinct* paragraphs so the
     // doc still flows through the whole chain (skew tail, not a dup trigger)
     val text =
       if (id % 1000 == 999)
-        text0 + "\n" + cleanDoc(new DocRng(seed ^ id ^ 0x5eedL), 120)
+        text0 + "\n" + cleanDoc(docRng(seed ^ id ^ 0x5eedL), 120)
       else text0
     val fqdn =
       if (rng.nextDouble() < 0.10) "hot.example.com" // hot domain ~10%

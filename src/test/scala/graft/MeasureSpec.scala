@@ -102,6 +102,25 @@ class MeasureSpec extends SparkSpec {
     assert(Measure.scale(spark, 2000, Seq("none")).map(_._1) == Seq("gen_corpus"))
   }
 
+  test("diff: web, zh and syn write the harness inputs, pinned by an order-free digest") {
+    val dir = java.nio.file.Files.createTempDirectory("measure_diff")
+    for (kind <- Seq("web", "zh", "syn")) Measure.diff(spark, kind, s"$dir/$kind", 200)
+    // (columns, rows, wrapping sum of each row's xxhash64): the digests are
+    // those of the single-purpose dump mains this layer replaced, at 200 rows
+    def digest(sub: String): (Seq[String], Long, Long) = {
+      val df = spark.read.parquet(s"$dir/$sub")
+      (df.columns.toSeq, df.count(), df.select(xxhash64(df.columns.map(col).toSeq: _*)).as[Long].collect().sum)
+    }
+    val expected = Seq(
+      "web/corpus" -> (Seq("url", "text", "lang"), 200L, -1451135615146879691L),
+      "web/result" -> (Seq("url", "lang", "keep", "drop_reason", "drop_stage", "text", "simplified", "sig0"),
+        200L, 7087976218727765755L),
+      "zh/zh" -> (Seq("doc_id", "text", "reason_quality", "reason_repetition"), 200L, -7167904468164729773L),
+      "syn/split" -> (Seq("id", "text", "sents"), 200L, -552977224581525991L),
+      "syn/calc" -> (Seq("id", "labels", "parents", "q_ent", "q_height", "q_dis"), 200L, -5459221674100931652L))
+    for ((sub, want) <- expected) assert(digest(sub) == want, sub)
+  }
+
   test("streaming: TTL evicts keys and the state stays under its bound") {
     val r = Measure.streaming(spark, 2000, 1)
     assert(r.inputRows > 0)

@@ -4,7 +4,7 @@
 Executes the REFERENCE's own filter code (/root/reference — read-only) over
 the engine's synthetic corpus and compares per-document keep/drop labels and
 PII-scrubbed text against the Scala engine's output (written by
-graft.DiffDump).
+graft.Measure's `diff web` layer, DiffDump.dump).
 
 The reference package can't be imported wholesale offline (loguru/fsspec/
 nltk/spacy are absent), so this harness stubs exactly those seams:
@@ -17,7 +17,9 @@ nltk/spacy are absent), so this harness stubs exactly those seams:
 Everything else — the Gopher/C4/FineWeb/badwords/PII rule code — is the
 reference's verbatim source, exec'd from /root/reference.
 
-Usage: python3 tools/diff_harness.py /tmp/graft_diff
+Usage:
+  sbt -batch "runMain graft.Measure diff web /tmp/graft_diff"
+  python3 tools/diff_harness.py /tmp/graft_diff
 """
 import math
 import os

@@ -6,11 +6,11 @@ exec'd with the `ltp` import stubbed — the LTP model itself is GPU+download
 and is behind the engine's DependencyParser seam) and the
 SyntacticComplexityCalculator arithmetic (calc_counter_entropy +
 calc_tree_height from cdf_gc/gc_calculator.py, plus the run() loop body
-mirrored verbatim below) over the corpus written by graft.SynDiffDump, and
+mirrored verbatim below) over the corpus written by `graft.Measure diff syn`, and
 reports agreement with the engine's outputs.
 
 Usage:
-  sbt -batch "runMain graft.SynDiffDump /tmp/graft_syn_diff"
+  sbt -batch "runMain graft.Measure diff syn /tmp/graft_syn_diff"
   python3 tools/syn_diff.py /tmp/graft_syn_diff
 """
 import os

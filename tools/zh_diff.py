@@ -2,13 +2,13 @@
 """zh differential harness (driver-side tooling, not part of the library).
 
 Replays the REFERENCE's GopherQualityFilter / GopherRepetitionFilter code
-over the zh corpus written by graft.ZhDiffDump, with an INDEPENDENT Python
+over the zh corpus written by `graft.Measure diff zh`, with an INDEPENDENT Python
 port of the jieba DAG/max-prob segmentation over the committed dict
 (src/main/resources/graft/zh_dict.tsv) standing in for jieba (absent
 offline), and reports keep/drop + reason agreement vs the engine's labels.
 
 Usage:
-  sbt -batch "runMain graft.ZhDiffDump /tmp/graft_zh_diff"
+  sbt -batch "runMain graft.Measure diff zh /tmp/graft_zh_diff"
   python3 tools/zh_diff.py /tmp/graft_zh_diff
 """
 import math
